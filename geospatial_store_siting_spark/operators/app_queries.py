@@ -23,8 +23,9 @@ DataFrame programs here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions.exprs import dround
 from . import rings
@@ -105,18 +106,36 @@ DEMO_SCORE_RECORD = {
 }
 
 
+def _site_in(site_ids: list[int]) -> Column:
+    """``site_id IN (site_ids)`` that compiles once for every site.
+    Generated code embeds a bigint literal's value, so ``site_id = <id>``
+    compiles new whole-stage classes for each site looked up; an array
+    literal is passed to the generated code by reference.  The cost is
+    parquet pushdown (``array_contains`` is not a source filter)."""
+    ids = F.array(*[F.lit(int(i)).cast("long") for i in site_ids])
+    return F.array_contains(ids, F.col("site_id"))
+
+
 def location_detail(
     spark: SparkSession, site_id: int, features_df: DataFrame | None = None
 ) -> DataFrame:
-    """Point lookup: features ⋈ scored with the site filter PUSHED under
-    both join inputs (J11).  Reads the pipeline's committed gold tables
+    """Point lookup: features ⋈ scored with the site filter (``_site_in``,
+    so a new site compiles no class) applied to BOTH join inputs (J11).
+    The scored side is filtered here, not left to the optimizer: the
+    session turns constraint propagation off (session.py), so Catalyst
+    never copies the features-side filter across the join, and an
+    unfiltered scored side would broadcast every scored row per lookup.
+    Reads the pipeline's committed gold tables
     when available (features.gold_features) — the reference app queries
     gold.location_features, it does not re-derive the feature plan per
     request (`app/main.py:179-192`)."""
     from .features import gold_features
 
-    feats = gold_features(spark, features_df).filter(F.col("site_id") == site_id)
-    scored = scored_view(spark).select("site_id", "predicted_annual_sales", "percentile", "tier")
+    hit = _site_in([site_id])
+    feats = gold_features(spark, features_df).filter(hit)
+    scored = scored_view(spark).filter(hit).select(
+        "site_id", "predicted_annual_sales", "percentile", "tier"
+    )
     return feats.join(scored, "site_id", "left")
 
 
@@ -302,6 +321,15 @@ WHERE EXISTS (SELECT 1 FROM cells c WHERE c.cell_id = g.cell_id)"""
 # Write-back sink: flagged sites (S8) — append + latest-wins view
 # ---------------------------------------------------------------------------
 
+# the flag event log's schema: the writer casts to it, the reader declares it
+FLAG_SCHEMA = StructType([
+    StructField("site_id", LongType()),
+    StructField("status", StringType()),
+    StructField("note", StringType()),
+    StructField("seq", LongType()),
+])
+
+
 def flag_site(
     spark: SparkSession,
     path: str,
@@ -314,16 +342,26 @@ def flag_site(
     table = event append; readers resolve latest-wins (below).  ``seq`` is
     the ordering key (monotonic writer sequence; reference uses
     current_timestamp at `app/main.py:822` — injectable here so tests are
-    deterministic)."""
-    row = [(int(site_id), status, note, int(seq if seq is not None else 0))]
-    df = spark.createDataFrame(row, "site_id bigint, status string, note string, seq bigint")
-    df.write.mode("append").parquet(path)
+    deterministic).
+
+    The row is built JVM-side as literals over a one-partition range, so
+    the append is one job of one task.  ``createDataFrame(list)`` would
+    ship the row through ``parallelize`` into a Python RDD, running the
+    write's tasks in Python workers."""
+    values = (int(site_id), status, note, int(seq if seq is not None else 0))
+    row = spark.range(1, numPartitions=1).select(*[
+        F.lit(v).cast(f.dataType).alias(f.name)
+        for v, f in zip(values, FLAG_SCHEMA.fields)
+    ])
+    row.write.mode("append").parquet(path)
 
 
 def flagged_sites(spark: SparkSession, path: str) -> DataFrame:
     """Latest-wins resolution of the flag event log (U4: row_number over
-    (site, seq desc) == 1 — the MERGE-less UPDATE)."""
-    log = spark.read.parquet(path)
+    (site, seq desc) == 1 — the MERGE-less UPDATE).  The log is read with
+    the declared ``FLAG_SCHEMA``, so a read-back launches no
+    schema-inference job over the log's files."""
+    log = spark.read.schema(FLAG_SCHEMA).parquet(path)
     w = Window.partitionBy("site_id").orderBy(F.desc("seq"))
     return (
         log.withColumn("__rn", F.row_number().over(w))
@@ -751,13 +789,15 @@ def compare_sites(
     spark: SparkSession, site_ids: list[int], features_df: DataFrame | None = None
 ) -> DataFrame:
     """Batch compare (`app/main.py:282-305`): features ⋈ scored for an
-    IN-list of 1-4 sites (P7 + J12)."""
+    IN-list of 1-4 sites (P7 + J12), filtered on both join inputs as in
+    location_detail."""
     from .features import gold_features
 
     if not site_ids or len(site_ids) > 4:
         raise ValueError("Provide 1-4 site_ids")
-    feats = gold_features(spark, features_df).filter(F.col("site_id").isin(*site_ids))
-    scored = scored_view(spark).select(
+    hit = _site_in(site_ids)
+    feats = gold_features(spark, features_df).filter(hit)
+    scored = scored_view(spark).filter(hit).select(
         "site_id", "predicted_annual_sales", "percentile", "tier"
     )
     return feats.join(scored, "site_id", "left").orderBy("site_id")

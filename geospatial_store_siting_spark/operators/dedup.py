@@ -1293,6 +1293,13 @@ def dedup_incremental(
 
 
 INGEST_INDEX_BUCKETS = 32  # production: size so one bucket ~ one executor core
+# the ingest probe-index tables and the column each is bucketed (and
+# sorted) on
+INGEST_INDEX_TABLES = (
+    ("ingest_fp_idx", "fp"),
+    ("ingest_band_idx", "bkey"),
+    ("ingest_sig_idx", "cdoc"),
+)
 
 
 def ingest_probe_index(
@@ -1332,11 +1339,7 @@ def ingest_probe_index(
                 spark, name, sf_dir, key, bucket_col=col,
                 n_buckets=INGEST_INDEX_BUCKETS,
             )
-            for name, col in (
-                ("ingest_fp_idx", "fp"),
-                ("ingest_band_idx", "bkey"),
-                ("ingest_sig_idx", "cdoc"),
-            )
+            for name, col in INGEST_INDEX_TABLES
         ]
         if all(c is not None for c in committed):
             return committed[0], committed[1], committed[2]
@@ -1354,20 +1357,14 @@ def ingest_probe_index(
         .groupBy("fp")
         .agg(F.min("doc_id").alias("exact_match"))
     )
-    fp_idx = iceberg.write_stage_bucketed(
-        spark, corpus_fp_plan, "ingest_fp_idx", sf_dir, bucket_col="fp",
-        n_buckets=INGEST_INDEX_BUCKETS, sort_cols=["fp"],
-        content_key=key, force=force,
-    )
-    band_idx = iceberg.write_stage_bucketed(
-        spark, corpus_buckets_plan, "ingest_band_idx", sf_dir, bucket_col="bkey",
-        n_buckets=INGEST_INDEX_BUCKETS, sort_cols=["bkey"],
-        content_key=key, force=force,
-    )
-    sig_idx = iceberg.write_stage_bucketed(
-        spark, corpus_sigs_plan, "ingest_sig_idx", sf_dir, bucket_col="cdoc",
-        n_buckets=INGEST_INDEX_BUCKETS, sort_cols=["cdoc"],
-        content_key=key, force=force,
+    plans = (corpus_fp_plan, corpus_buckets_plan, corpus_sigs_plan)
+    fp_idx, band_idx, sig_idx = (
+        iceberg.write_stage_bucketed(
+            spark, plan, name, sf_dir, bucket_col=col,
+            n_buckets=INGEST_INDEX_BUCKETS, sort_cols=[col],
+            content_key=key, force=force,
+        )
+        for plan, (name, col) in zip(plans, INGEST_INDEX_TABLES)
     )
     return fp_idx, band_idx, sig_idx
 
@@ -1513,17 +1510,23 @@ def classify_arrivals(
 
 def _ingest_index_key() -> str:
     """Content key of the committed ingest probe index: split semantics +
-    signature definition + producing code — shared by the builder
-    (ingest_probe_index) and the incremental maintainer (commit_arrivals)
-    so both resolve the same committed stage directories."""
+    signature definition + bucket layout + producing code — shared by the
+    index build (ingest_probe_index), the incremental maintainer
+    (commit_arrivals) and compaction so all resolve the same committed
+    stage directories.  The bucket layout is part of the identity because
+    the parquet fallback keys a stage directory on the content key alone:
+    without it, a changed bucket count would keep serving the old
+    layout."""
     from .sampling import _u_col
 
+    buckets = ",".join(col for _, col in INGEST_INDEX_TABLES)
     return _content_key(
         # sig-int-v2: the packed signature element type is part of the
         # index identity (array<int> since r6 — bkey hashes and sig_b
         # bytes both depend on it)
         f"ingest-index|{INGEST_SEED}|{INGEST_FRACTION}|"
-        f"{MINHASH_SEEDS}x{LSH_BANDS}|sig-int-v2",
+        f"{MINHASH_SEEDS}x{LSH_BANDS}|sig-int-v2|"
+        f"bucket:{buckets}x{INGEST_INDEX_BUCKETS}",
         code=(shingles, minhash_signatures, _band_buckets, _u_col),
     )
 
@@ -1575,17 +1578,10 @@ def commit_arrivals(
         sigs.select(F.col("cdoc").alias("doc_id"), F.col("sig_b").alias("sig"))
     ).select(F.col("doc_id").alias("cdoc"), "bkey")
     key = _ingest_index_key()
-    out = {}
-    out["ingest_fp_idx"] = iceberg.append_stage_bucketed(
-        spark, fp_rows, "ingest_fp_idx", sf_dir, content_key=key
-    )
-    out["ingest_band_idx"] = iceberg.append_stage_bucketed(
-        spark, band_rows, "ingest_band_idx", sf_dir, content_key=key
-    )
-    out["ingest_sig_idx"] = iceberg.append_stage_bucketed(
-        spark, sigs, "ingest_sig_idx", sf_dir, content_key=key
-    )
-    return out
+    return {
+        name: iceberg.append_stage_bucketed(spark, rows, name, sf_dir, content_key=key)
+        for rows, (name, _) in zip((fp_rows, band_rows, sigs), INGEST_INDEX_TABLES)
+    }
 
 
 def compact_ingest_index(spark: SparkSession, sf_dir: str) -> dict:
@@ -1606,7 +1602,7 @@ def compact_ingest_index(spark: SparkSession, sf_dir: str) -> dict:
         name: snapshots.compact_bucketed(
             spark, iceberg.stage_path(None, name, sf_dir, key)
         )
-        for name in ("ingest_fp_idx", "ingest_band_idx", "ingest_sig_idx")
+        for name, _ in INGEST_INDEX_TABLES
     }
 
 

@@ -3,8 +3,8 @@
 Replaces the reference's driver-side ``h3.grid_disk`` loop
 (``/root/reference/notebooks/10_feature_engineering.py:77-116`` — collect
 5,350 sites to the driver, expand in Python, createDataFrame back) with a
-fully distributed expansion: a 7/19/37-row offsets dimension is joined
-(Catalyst broadcasts a literal local relation for free) and the neighbor
+fully distributed expansion: each site row explodes a literal array of
+the 7/19/37 k-disk offsets (no join, no exchange) and the neighbor
 cell id is closed-form bigint arithmetic — so the expansion runs JVM-side
 inside whole-stage codegen, scales linearly with sites, and never touches
 the driver.
@@ -17,13 +17,6 @@ from pyspark.sql import functions as F
 
 from ..config import AXIS_OFFSET, AXIS_SHIFT, RES_CODE_SHIFT
 from ..functions import hex_sql
-
-
-def offsets_df(spark: SparkSession, k: int) -> DataFrame:
-    """The k-disk offsets as a tiny DataFrame (1+3k(k+1) rows)."""
-    return spark.createDataFrame(
-        [(int(dq), int(dr)) for dq, dr in hex_sql.ring_offsets(k)], "dq int, dr int"
-    )
 
 
 def neighbor_cell_col(q, r, res: int = 8):

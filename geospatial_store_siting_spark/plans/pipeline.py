@@ -135,7 +135,9 @@ def run_pipeline(spark: SparkSession, sf_dir: str, force: bool = False) -> dict:
                 with open(report_path) as f:
                     meta = json.load(f)
                 meta["resumed"] = True
-                tables.register_stage_view(spark, st.name, spark.read.parquet(path), sf_dir)
+                tables.register_stage_view(
+                    spark, st.name, snapshots.read_committed(spark, path), sf_dir
+                )
                 report["stages"].append(meta)
                 continue
             if os.path.exists(path) and force:

@@ -112,11 +112,9 @@ def read_stage_committed(
     from . import snapshots
 
     path = stage_path(None, name, sf_dir, content_key, root=root)
-    manifest = os.path.join(path, "_manifest.json")
-    if not os.path.exists(manifest):
+    if not os.path.exists(os.path.join(path, "_manifest.json")):
         return None
-    snapshots.touch_manifest(manifest)
-    return spark.read.parquet(path)
+    return snapshots.read_committed(spark, path)
 
 
 def read_stage_bucketed_committed(
@@ -313,7 +311,8 @@ def read_stage_version(
             f"stage {name!r} has {len(versions)} committed version(s); "
             f"requested {version}"
         ) from None
-    return spark.read.parquet(entry["path"])
+    # an audit read: no use stamp, so prune still ranks by live reads
+    return snapshots.read_committed(spark, entry["path"], touch=False)
 
 
 def stage_history(

@@ -75,20 +75,44 @@ def snapshot_table(
             # dir rename and the manifest write leaves a manifest-less dir;
             # without this, every later call recomputes and discards
             # forever and resume treats the stage as uncommitted.
-            rows = spark.read.parquet(path).count()
+            committed = spark.read.parquet(path)
             meta = {
                 "table": name,
-                "rows": rows,
+                "rows": committed.count(),
                 "sf_dir": sf_dir,
                 "committed_at": time.time(),
-                "schema": spark.read.parquet(path).schema.jsonValue(),
+                "schema": committed.schema.jsonValue(),
             }
             with open(manifest + f".tmp-{os.getpid()}", "w") as f:
                 json.dump(meta, f)
             os.rename(manifest + f".tmp-{os.getpid()}", manifest)
-    else:
-        touch_manifest(manifest)  # reuse: GC ranks live keys above stale ones
+    return read_committed(spark, path)
+
+
+def read_committed(spark: SparkSession, path: str, touch: bool = True) -> DataFrame:
+    """Reader of a committed snapshot directory.  The manifest records
+    the table's schema at commit time, so the scan is declared with it
+    instead of inferred: parquet schema inference is a Spark job (a
+    footer-reading task per read), and every warm read — a stage resume,
+    a committed-stage fast lane, a snapshot reuse — would otherwise pay
+    one.  Falls back to inference only for a manifest without a schema.
+    ``touch`` stamps the manifest's ``last_used_at`` (prune keeps the
+    keys still being read)."""
+    manifest = os.path.join(path, "_manifest.json")
+    meta = touch_manifest(manifest) if touch else _load_manifest(manifest)
+    if meta and meta.get("schema"):
+        from pyspark.sql.types import StructType
+
+        return spark.read.schema(StructType.fromJson(meta["schema"])).parquet(path)
     return spark.read.parquet(path)
+
+
+def _load_manifest(manifest: str) -> dict | None:
+    try:
+        with open(manifest) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
 
 
 def read_manifest(sf_dir: str, name: str, defining_sql: str, root: str = DEFAULT_ROOT):
@@ -99,7 +123,7 @@ def read_manifest(sf_dir: str, name: str, defining_sql: str, root: str = DEFAULT
     return None
 
 
-def touch_manifest(manifest: str, min_interval_sec: float = 3600) -> None:
+def touch_manifest(manifest: str, min_interval_sec: float = 3600) -> dict | None:
     """Stamp ``last_used_at`` on a committed snapshot's manifest (atomic
     rewrite), throttled so hot-loop readers (the CC rounds, warm bench
     paths) don't rewrite it on every read.  prune() ranks snapshots by
@@ -107,20 +131,19 @@ def touch_manifest(manifest: str, min_interval_sec: float = 3600) -> None:
     still being READ survives GC even when a newer key was committed and
     later abandoned (the plan-revert scenario: without the use stamp,
     keep-latest-committed would delete the live snapshot and keep the
-    dead one)."""
-    try:
-        with open(manifest) as f:
-            meta = json.load(f)
-    except (OSError, ValueError):
-        return
+    dead one).  Returns the manifest (None when it is unreadable)."""
+    meta = _load_manifest(manifest)
+    if meta is None:
+        return None
     now = time.time()
     if now - meta.get("last_used_at", meta.get("committed_at", 0)) < min_interval_sec:
-        return
+        return meta
     meta["last_used_at"] = now
     tmp = manifest + f".tmp-{os.getpid()}"
     with open(tmp, "w") as f:
         json.dump(meta, f)
     os.rename(tmp, manifest)
+    return meta
 
 
 # content-keyed snapshot dirs are the ONLY thing prune may touch: the
@@ -422,8 +445,9 @@ def compact_bucketed(spark: SparkSession, path: str) -> dict:
     # repartition as redundant while the planner independently disables
     # bucketed reading for a bare scan→write — net NO exchange, and writer
     # tasks then hold arbitrary file splits, emitting one file per
-    # (task, bucket) pair instead of one per bucket
-    current = spark.read.parquet(path)
+    # (task, bucket) pair instead of one per bucket.  No use stamp: the
+    # manifest is rewritten below from ``meta``
+    current = read_committed(spark, path, touch=False)
     tmp = f"{path}.compact-{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
     tmp_tbl = f"{_bucket_table_name(path)}_c{os.getpid()}"
@@ -484,6 +508,4 @@ def commit_dataframe(spark: SparkSession, df: DataFrame, path: str) -> DataFrame
             with open(manifest + f".tmp-{os.getpid()}", "w") as f:
                 json.dump(meta, f)
             os.rename(manifest + f".tmp-{os.getpid()}", manifest)
-    else:
-        touch_manifest(manifest)  # reuse: GC ranks live keys above stale ones
-    return spark.read.parquet(path)
+    return read_committed(spark, path)

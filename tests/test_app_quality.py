@@ -7,6 +7,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from geospatial_store_siting_spark.operators import app_queries, quality
+from tests.conftest import launched_jobs
 
 
 def test_quality_gate_passes(geo):
@@ -41,6 +42,30 @@ def test_flag_site_latest_wins(geo):
     assert latest == {1: "rejected", 2: "shortlisted"}
     joined = app_queries.flagged_with_scores(geo, path)
     assert joined.count() == 2
+
+
+def test_flag_round_trip_notes_and_schema(geo, tmp_path):
+    """Notes survive the write as literals (quotes, a backslash, unicode,
+    the empty string); ``seq=None`` writes 0; the log's files carry
+    FLAG_SCHEMA; each append is one job of one task."""
+    path = str(tmp_path / "log")
+    notes = ['say "hi"', "it's", "back\\slash", "café ☕ 東京", ""]
+    for seq, note in enumerate(notes, start=1):
+        app_queries.flag_site(geo, path, seq, "review", note=note, seq=seq)
+    with launched_jobs(geo) as jobs:
+        app_queries.flag_site(geo, path, 99, "shortlist", note="no seq")
+    tracker = geo.sparkContext.statusTracker()
+    assert len(jobs) == 1
+    stages = tracker.getJobInfo(jobs[0]).stageIds
+    assert sum(tracker.getStageInfo(s).numTasks for s in stages) == 1
+    assert geo.read.parquet(path).schema == app_queries.FLAG_SCHEMA
+    got = {
+        r["site_id"]: (r["status"], r["note"], r["seq"])
+        for r in app_queries.flagged_sites(geo, path).collect()
+    }
+    expected = {seq: ("review", note, seq) for seq, note in enumerate(notes, start=1)}
+    expected[99] = ("shortlist", "no seq", 0)
+    assert got == expected
 
 
 def test_similar_locations_excludes_probe_and_ranks(geo):

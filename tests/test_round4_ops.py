@@ -187,6 +187,33 @@ class TestSnapshotFedSurface:
         # staged plan is a point-filtered parquet scan of the gold table
         assert "centroid_lat" not in plan
 
+    def test_lookups_filter_both_join_inputs(self, staged):
+        """Constraint propagation is off, so no filter is inferred across
+        the join: each lookup must filter the scored side itself."""
+        import re
+
+        from geospatial_store_siting_spark.operators import app_queries
+
+        for df in (
+            app_queries.location_detail(staged, 42),
+            app_queries.compare_sites(staged, [1, 2, 42]),
+        ):
+            plan = _optimized(df)
+            assert len(re.findall(r"Filter .*site_id", plan)) == 2, plan
+
+    def test_lookup_of_a_new_site_compiles_no_class(self, staged):
+        """A bigint literal is inlined into generated code; the lookups'
+        site filter passes the ids by reference, so after one lookup a
+        lookup of another site reuses every generated class."""
+        from geospatial_store_siting_spark.operators import app_queries
+
+        metrics = staged.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        compiles = metrics.METRIC_COMPILATION_TIME()
+        app_queries.location_detail(staged, 42).collect()
+        before = compiles.getCount()
+        app_queries.location_detail(staged, 43).collect()
+        assert compiles.getCount() == before
+
     def test_similar_and_compare_read_committed_stage(self, staged):
         from geospatial_store_siting_spark.operators import app_queries
 
