@@ -8,7 +8,12 @@ DataFrame programs here:
 
 - ``scored_locations``      : dynamic WHERE builder (P13) + ORDER BY/LIMIT
                               (`app/main.py:146-167`)
-- ``location_detail``       : point-lookup join (J11, `app/main.py:179-192`)
+- ``location_detail``       : point lookup (J11, `app/main.py:179-192`) and
+  ``compare_sites``           its 1-4 site IN-list twin, both served from
+                              the committed ``site_detail`` gold stage
+                              (features ⋈ scores, joined once by the
+                              pipeline): one filtered scan per request,
+                              resolved by ``site_detail``
 - ``competition_heatmap``   : bbox prefilter (P8) + per-hex counts (A5)
                               (`app/main.py:375-406,446-463`)
 - ``similar_locations``     : cosine kNN over standardized feature vectors
@@ -74,10 +79,13 @@ def score_feature_record(spark: SparkSession, features: dict) -> DataFrame:
     operators/ml.model_predictions (rows-only, iterative)."""
     from .scoring import SCORE_WEIGHTS, predicted_sales_col
 
-    names = [n for n, _ in SCORE_WEIGHTS]
-    row = [tuple(float(features.get(n, 0.0)) for n in names)]
-    df = spark.createDataFrame(row, ", ".join(f"{n} double" for n in names))
-    return df.select(predicted_sales_col().alias("predicted_annual_sales"))
+    # the record is built JVM-side, as in flag_site: createDataFrame(list)
+    # would route the row through a Python RDD
+    row = spark.range(1, numPartitions=1).select(*[
+        F.lit(float(features.get(n, 0.0))).cast("double").alias(n)
+        for n, _ in SCORE_WEIGHTS
+    ])
+    return row.select(predicted_sales_col().alias("predicted_annual_sales"))
 
 
 def score_feature_record_oracle_sql(features: dict) -> str:
@@ -116,27 +124,55 @@ def _site_in(site_ids: list[int]) -> Column:
     return F.array_contains(ids, F.col("site_id"))
 
 
+# the scored-side columns the J11 lookup keeps, after the feature columns
+DETAIL_SCORE_COLS = ["site_id", "predicted_annual_sales", "percentile", "tier"]
+
+
+def site_detail(
+    spark: SparkSession,
+    site_ids: list[int] | None = None,
+    features_df: DataFrame | None = None,
+) -> DataFrame:
+    """Resolve gold.site_detail — features ⋈ scored, left, on ``site_id``
+    (J11) — for ``site_ids`` (every site when None), the way
+    features.gold_features and scoring.scored_view resolve their tables:
+
+    - an explicit ``features_df`` wins: the join runs over it;
+    - else the pipeline's committed ``site_detail`` stage: one
+      ``_site_in``-filtered scan, no join, no exchange;
+    - else the join over the resolved feature and score tables.
+
+    A joining lookup filters BOTH inputs: the session turns constraint
+    propagation off (session.py), so Catalyst never copies the
+    features-side filter across the join, and an unfiltered scored side
+    would broadcast every scored row per lookup.  The pipeline's
+    ``site_detail`` stage is this function with no site ids."""
+    hit = None if site_ids is None else _site_in(site_ids)
+    if features_df is None:
+        from ..sources.tables import stage_view
+
+        staged = stage_view(spark, "site_detail")
+        if staged is not None:
+            return staged if hit is None else staged.filter(hit)
+    from .features import gold_features
+
+    feats = gold_features(spark, features_df)
+    scored = scored_view(spark).select(*DETAIL_SCORE_COLS)
+    if hit is not None:
+        feats, scored = feats.filter(hit), scored.filter(hit)
+    return feats.join(scored, "site_id", "left")
+
+
 def location_detail(
     spark: SparkSession, site_id: int, features_df: DataFrame | None = None
 ) -> DataFrame:
-    """Point lookup: features ⋈ scored with the site filter (``_site_in``,
-    so a new site compiles no class) applied to BOTH join inputs (J11).
-    The scored side is filtered here, not left to the optimizer: the
-    session turns constraint propagation off (session.py), so Catalyst
-    never copies the features-side filter across the join, and an
-    unfiltered scored side would broadcast every scored row per lookup.
-    Reads the pipeline's committed gold tables
-    when available (features.gold_features) — the reference app queries
-    gold.location_features, it does not re-derive the feature plan per
-    request (`app/main.py:179-192`)."""
-    from .features import gold_features
-
-    hit = _site_in([site_id])
-    feats = gold_features(spark, features_df).filter(hit)
-    scored = scored_view(spark).filter(hit).select(
-        "site_id", "predicted_annual_sales", "percentile", "tier"
-    )
-    return feats.join(scored, "site_id", "left")
+    """Point lookup: the site's feature row with its prediction,
+    percentile and tier (J11), resolved by ``site_detail``: a scan of
+    the committed ``site_detail`` stage when the pipeline published one —
+    the reference app queries gold tables, it does not join or re-derive
+    them per request (`app/main.py:179-192`).  The site filter is
+    ``_site_in``, so a new site compiles no class."""
+    return site_detail(spark, [site_id], features_df)
 
 
 def competition_heatmap(
@@ -181,7 +217,9 @@ def similar_locations(
     The reference collects every feature row into the app process and
     loops in Python (`app/main.py:603-647`); here: global standardization
     stats (one agg), z-scored vectors, the probe row broadcast, cosine as
-    a native expression, top-k via TakeOrderedAndProject."""
+    a native expression, top-k via TakeOrderedAndProject.  The probe and
+    the ``!=`` cut filter through ``_site_in``, so a new site compiles no
+    class; the stage scan loses parquet pushdown of the probe filter."""
     from .features import gold_features
 
     feats = gold_features(spark, features_df).select("site_id", "metro", *FEATURE_VEC_COLS)
@@ -198,10 +236,10 @@ def similar_locations(
             ),
         )
     zcols = [f"z_{c}" for c in FEATURE_VEC_COLS]
-    probe = z.filter(F.col("site_id") == site_id).select(
+    probe = z.filter(_site_in([site_id])).select(
         *[F.col(c).alias(f"p_{c}") for c in zcols]
     )
-    paired = z.filter(F.col("site_id") != site_id).crossJoin(F.broadcast(probe))
+    paired = z.filter(~_site_in([site_id])).crossJoin(F.broadcast(probe))
     dot = sum(F.col(c) * F.col(f"p_{c}") for c in zcols)
     norm_a = F.sqrt(sum(F.col(c) * F.col(c) for c in zcols))
     norm_b = F.sqrt(sum(F.col(f"p_{c}") * F.col(f"p_{c}") for c in zcols))
@@ -216,8 +254,10 @@ def similar_locations(
 def daypart_trade_area(spark: SparkSession, site_id: int) -> DataFrame:
     """Trade-area hex semantics of the daypart endpoint: the site's hex ∪
     its k-ring (U2 union of the exploded ring), left-semi joined against
-    the grid, then means (J18 → semi join against an exploded ring frame)."""
-    site = spark.table("sites").filter(F.col("site_id") == site_id)
+    the grid, then means (J18 → semi join against an exploded ring frame).
+    The site filter is ``_site_in``, so a new site compiles no class; the
+    ``sites`` scan loses parquet pushdown of it."""
+    site = spark.table("sites").filter(_site_in([site_id]))
     ring = rings.ring_pairs(spark, site, k=1).select(
         F.col("neighbor_h3").alias("cell_id")
     )
@@ -393,7 +433,9 @@ def whatif_cannibalization(spark: SparkSession, site_id: int) -> DataFrame:
     2×radius of the site — superset of anything within radius of an
     impacted store) is broadcast, per-store gravity sums are one hash agg.
     The gravity kernel is the repo's trig-free planar ``1/max(d², floor²)``
-    (operators/huff.py) so the oracle matches bit-for-bit."""
+    (operators/huff.py) so the oracle matches bit-for-bit.  The site
+    filter is ``_site_in``, so a new site compiles no class; the ``sites``
+    scan loses parquet pushdown of it."""
     from ..config import TRADE_AREA_RADIUS_MILES
     from .huff import _dist2_miles, _gravity2
 
@@ -402,7 +444,7 @@ def whatif_cannibalization(spark: SparkSession, site_id: int) -> DataFrame:
     attract = F.col("square_feet") * (
         1.0 + F.when(F.col("drive_thru") > 0, 0.3).otherwise(0.0)
     )
-    site = sites.filter(F.col("site_id") == site_id).select(
+    site = sites.filter(_site_in([site_id])).select(
         F.col("metro").alias("n_metro"),
         F.col("lat").alias("n_lat"),
         F.col("lon").alias("n_lon"),
@@ -575,11 +617,13 @@ def confidence_intervals(
     normalized feature distance is a native expression, top-K is a
     row_number cut, and the percentiles are one exact-percentile agg.
     Ranking uses the squared distance (sqrt is monotonic) with a site_id
-    tiebreak so the cut is engine-deterministic."""
+    tiebreak so the cut is engine-deterministic.  The candidate filter is
+    ``_site_in``, so a new site compiles no class; the feature scan loses
+    parquet pushdown of it."""
     from .features import gold_features
 
     feats = gold_features(spark, features_df)
-    cand = feats.filter(F.col("site_id") == site_id).select(
+    cand = feats.filter(_site_in([site_id])).select(
         *[F.col(c).alias(f"c_{c}") for c in CI_FEATURES]
     )
     stores = (
@@ -788,19 +832,12 @@ LIMIT {limit}"""
 def compare_sites(
     spark: SparkSession, site_ids: list[int], features_df: DataFrame | None = None
 ) -> DataFrame:
-    """Batch compare (`app/main.py:282-305`): features ⋈ scored for an
-    IN-list of 1-4 sites (P7 + J12), filtered on both join inputs as in
-    location_detail."""
-    from .features import gold_features
-
+    """Batch compare (`app/main.py:282-305`): the J11 rows of an IN-list
+    of 1-4 sites (P7), resolved like location_detail by ``site_detail``,
+    so a published stage serves them from one filtered scan."""
     if not site_ids or len(site_ids) > 4:
         raise ValueError("Provide 1-4 site_ids")
-    hit = _site_in(site_ids)
-    feats = gold_features(spark, features_df).filter(hit)
-    scored = scored_view(spark).filter(hit).select(
-        "site_id", "predicted_annual_sales", "percentile", "tier"
-    )
-    return feats.join(scored, "site_id", "left").orderBy("site_id")
+    return site_detail(spark, site_ids, features_df).orderBy("site_id")
 
 
 def compare_sites_oracle_sql(site_ids: list[int]) -> str:
@@ -823,11 +860,13 @@ def scoring_features(
 ) -> DataFrame:
     """Model-ready feature vector in the persisted training column order
     (`app/main.py:653-686`): the feature row UNPIVOTED through
-    gold.model_feature_columns so serving order == training order."""
+    gold.model_feature_columns so serving order == training order.  The
+    site filter is ``_site_in``, so a new site compiles no class; the
+    feature scan loses parquet pushdown of it."""
     from .encode import model_feature_columns, model_feature_column_names, one_hot_features
     from .features import gold_features
 
-    feats = gold_features(spark, features_df).filter(F.col("site_id") == site_id)
+    feats = gold_features(spark, features_df).filter(_site_in([site_id]))
     # drop drive_thru from the one-hot side: the assembly base already
     # carries it and a duplicate name breaks the unpivot reference
     feats = feats.join(one_hot_features(spark).drop("drive_thru"), "site_id", "left")

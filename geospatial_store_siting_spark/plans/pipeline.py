@@ -15,7 +15,9 @@ checkpointed Spark pipeline per the north rule:
   counts (spark_partition_id groupBy — the skew fingerprint);
 - committed stages are published as session views
   (sources/tables.register_stage_view) so the interactive app surface and
-  dev_signal_ring read the gold tables instead of recomputing them;
+  dev_signal_ring read the gold tables instead of recomputing them; the
+  last stage, ``site_detail``, is the app's point-lookup join (features ⋈
+  scores) committed once, so a lookup is a filtered scan of one table;
 - the module is a spark-submit entry point:
     spark-submit --py-files gss.zip -m geospatial_store_siting_spark.plans.pipeline
   (or `python -m ... --sf-dir /root/testdata/sf0.01`).
@@ -75,7 +77,7 @@ def _hotspot_stage(spark: SparkSession) -> DataFrame:
 
 def run_pipeline(spark: SparkSession, sf_dir: str, force: bool = False) -> dict:
     """Execute the DAG with checkpoint/resume; returns the run report."""
-    from ..operators import dev_signals, features, huff, scoring
+    from ..operators import app_queries, dev_signals, features, huff, scoring
 
     tables.load_all(spark, sf_dir)
 
@@ -117,6 +119,10 @@ def run_pipeline(spark: SparkSession, sf_dir: str, force: bool = False) -> dict:
             lambda sp: scoring.score_candidates(sp, features_df=sp.table("location_features")),
             ["location_features"],
         ),
+        # the app's point-lookup table (J11): committed features ⋈ committed
+        # scores, joined once here, so location_detail/compare_sites are a
+        # site-filtered scan of one table instead of a join per request
+        Stage("site_detail", app_queries.site_detail, ["location_features", "scored_locations"]),
     ]
 
     from ..sources import iceberg

@@ -33,6 +33,20 @@ def test_location_detail_point_lookup(geo):
     assert rows[0]["site_id"] == 42
 
 
+def test_score_feature_record_built_in_jvm(geo):
+    """The one-row record is JVM literals, not a Python RDD, and scores
+    to the oracle's value."""
+    import duckdb
+
+    df = app_queries.score_feature_record(geo, app_queries.DEMO_SCORE_RECORD)
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
+    want = duckdb.sql(
+        app_queries.score_feature_record_oracle_sql(app_queries.DEMO_SCORE_RECORD)
+    ).fetchall()
+    assert [tuple(r) for r in df.collect()] == want
+
+
 def test_flag_site_latest_wins(geo):
     path = tempfile.mkdtemp(prefix="flags_") + "/log"
     app_queries.flag_site(geo, path, 1, "shortlisted", seq=1)

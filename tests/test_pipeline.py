@@ -41,6 +41,7 @@ def test_pipeline_runs_and_resumes(geo, cold_run):
         "hotspot_scores",
         "huff_features",
         "scored_locations",
+        "site_detail",
     ]
     assert all(not s["resumed"] for s in report1["stages"])
     for s in report1["stages"]:

@@ -187,16 +187,38 @@ class TestSnapshotFedSurface:
         # staged plan is a point-filtered parquet scan of the gold table
         assert "centroid_lat" not in plan
 
-    def test_lookups_filter_both_join_inputs(self, staged):
-        """Constraint propagation is off, so no filter is inferred across
-        the join: each lookup must filter the scored side itself."""
+    def test_staged_lookups_scan_site_detail_only(self, staged):
+        """Over the committed ``site_detail`` stage a lookup is one
+        site-filtered scan of one table: no join, and one job."""
         import re
 
         from geospatial_store_siting_spark.operators import app_queries
+        from tests.conftest import launched_jobs
 
         for df in (
             app_queries.location_detail(staged, 42),
             app_queries.compare_sites(staged, [1, 2, 42]),
+        ):
+            plan = _optimized(df)
+            assert "Join" not in plan, plan
+            assert len(re.findall(r"Filter .*site_id", plan)) == 1, plan
+            assert df.inputFiles() and all("site_detail" in f for f in df.inputFiles())
+        with launched_jobs(staged) as jobs:
+            app_queries.location_detail(staged, 42).toPandas()
+        assert len(jobs) == 1
+
+    def test_lookups_filter_both_join_inputs(self, staged):
+        """With an explicit feature table the lookups join it to the scored
+        table.  Constraint propagation is off, so no filter is inferred
+        across the join: each lookup must filter the scored side itself."""
+        import re
+
+        from geospatial_store_siting_spark.operators import app_queries
+
+        feats = staged.table("location_features")
+        for df in (
+            app_queries.location_detail(staged, 42, features_df=feats),
+            app_queries.compare_sites(staged, [1, 2, 42], features_df=feats),
         ):
             plan = _optimized(df)
             assert len(re.findall(r"Filter .*site_id", plan)) == 2, plan
@@ -212,6 +234,26 @@ class TestSnapshotFedSurface:
         app_queries.location_detail(staged, 42).collect()
         before = compiles.getCount()
         app_queries.location_detail(staged, 43).collect()
+        assert compiles.getCount() == before
+
+    @pytest.mark.parametrize("endpoint, site_a, site_b", [
+        ("similar_locations", 42, 43),
+        ("scoring_features", 42, 43),
+        ("confidence_intervals", 42, 43),
+        ("daypart_trade_area", 42, 43),
+        ("whatif_cannibalization", 0, 11),  # at sf0.001 only stores have impacts
+    ])
+    def test_endpoint_compiles_no_class_for_a_new_site(self, staged, endpoint, site_a, site_b):
+        """The per-site endpoints filter through ``_site_in`` too: after a
+        lookup of one site, a lookup of another reuses every class."""
+        from geospatial_store_siting_spark.operators import app_queries
+
+        fn = getattr(app_queries, endpoint)
+        metrics = staged.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        compiles = metrics.METRIC_COMPILATION_TIME()
+        assert fn(staged, site_a).collect()
+        before = compiles.getCount()
+        assert fn(staged, site_b).collect()
         assert compiles.getCount() == before
 
     def test_similar_and_compare_read_committed_stage(self, staged):
@@ -246,11 +288,15 @@ class TestSnapshotFedSurface:
         from geospatial_store_siting_spark.operators import app_queries
         from geospatial_store_siting_spark.operators.features import location_features
 
-        staged_rows = app_queries.location_detail(staged, 42).toPandas()
-        fresh = app_queries.location_detail(
-            staged, 42, features_df=location_features(staged)
-        ).toPandas()
-        assert staged_rows.sort_index(axis=1).equals(fresh.sort_index(axis=1))
+        fresh_feats = location_features(staged)
+        for lookup, sites in (
+            (app_queries.location_detail, 42),
+            (app_queries.compare_sites, [1, 2, 42]),
+        ):
+            staged_rows = lookup(staged, sites).toPandas()
+            fresh = lookup(staged, sites, features_df=fresh_feats).toPandas()
+            # same rows, and the stage keeps the fallback join's column order
+            assert not staged_rows.empty and staged_rows.equals(fresh)
 
 
 def test_stage_views_dropped_on_sf_change(geo):
