@@ -25,6 +25,8 @@ always (lo, hi) ordered to dedupe the symmetric pair space.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -106,20 +108,16 @@ def _stage_or_checkpoint(
 
     ``df`` may be a zero-arg callable returning the DataFrame: the warm
     path then resolves the committed stage WITHOUT constructing the
-    producing plan at all (the 64-agg signature plan costs ~0.4 s of
-    driver-serial py4j round trips per construction — r6 profiling showed
-    dedup_incremental building it twice per call just to throw it away)."""
+    producing plan at all (write_stage's warm path; the 64-agg signature
+    plan costs ~0.4 s of driver-serial py4j round trips per construction
+    — r6 profiling showed dedup_incremental building it twice per call
+    just to throw it away)."""
     if sf_dir:
         from ..sources import iceberg
 
-        key = _content_key(content_sql, code)
-        if not force:
-            committed = iceberg.read_stage_committed(spark, name, sf_dir, key)
-            if committed is not None:
-                return committed
-        frame = df() if callable(df) else df
         return iceberg.write_stage(
-            spark, frame, name, sf_dir, content_key=key, force=force,
+            spark, df, name, sf_dir, content_key=_content_key(content_sql, code),
+            force=force,
         )
     frame = df() if callable(df) else df
     return frame.localCheckpoint(eager=True)
@@ -1330,39 +1328,27 @@ def ingest_probe_index(
     from .sampling import _u_col
 
     key = _ingest_index_key()
-    if not force:
-        # warm-path fast lane: resolve all three committed probe stages
-        # without constructing any producing plan (the packed-signature
-        # subplan alone is ~0.4 s of driver-serial plan build)
-        committed = [
-            iceberg.read_stage_bucketed_committed(
-                spark, name, sf_dir, key, bucket_col=col,
-                n_buckets=INGEST_INDEX_BUCKETS,
-            )
-            for name, col in INGEST_INDEX_TABLES
-        ]
-        if all(c is not None for c in committed):
-            return committed[0], committed[1], committed[2]
     incoming = _u_col(key="doc_id", seed=INGEST_SEED) < F.lit(INGEST_FRACTION)
-    corpus_docs = spark.table("documents").filter(~incoming)
-    packed = _packed_signatures(spark, sf_dir)
-    corpus_sigs_plan = packed.filter(~incoming).select(
-        F.col("doc_id").alias("cdoc"), F.col("sig").alias("sig_b")
+
+    # the packed-signature subplan (~0.4 s of driver-serial plan build)
+    # is built at most once, and only when an index table is cold
+    packed = functools.cache(
+        lambda: _packed_signatures(spark, sf_dir).filter(~incoming)
     )
-    corpus_buckets_plan = _band_buckets(packed.filter(~incoming)).select(
-        F.col("doc_id").alias("cdoc"), "bkey"
+    plans = (
+        lambda: (
+            spark.table("documents").filter(~incoming)
+            .select("doc_id", F.md5("text").alias("fp"))
+            .groupBy("fp")
+            .agg(F.min("doc_id").alias("exact_match"))
+        ),
+        lambda: _band_buckets(packed()).select(F.col("doc_id").alias("cdoc"), "bkey"),
+        lambda: packed().select(F.col("doc_id").alias("cdoc"), F.col("sig").alias("sig_b")),
     )
-    corpus_fp_plan = (
-        corpus_docs.select("doc_id", F.md5("text").alias("fp"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("exact_match"))
-    )
-    plans = (corpus_fp_plan, corpus_buckets_plan, corpus_sigs_plan)
     fp_idx, band_idx, sig_idx = (
-        iceberg.write_stage_bucketed(
-            spark, plan, name, sf_dir, bucket_col=col,
-            n_buckets=INGEST_INDEX_BUCKETS, sort_cols=[col],
-            content_key=key, force=force,
+        iceberg.write_stage(
+            spark, plan, name, sf_dir, content_key=key, force=force,
+            bucket=(col, INGEST_INDEX_BUCKETS),
         )
         for plan, (name, col) in zip(plans, INGEST_INDEX_TABLES)
     )

@@ -728,7 +728,6 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str | None = None) -> DataFra
     the LM build's corpus scan runs once per corpus, and warm scoring
     runs scan the corpus exactly once."""
     from .dedup import _stage_or_checkpoint
-    from .skew import salted_sum
 
     docs = spark.table("documents")
     toks = docs.select(
@@ -737,25 +736,35 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str | None = None) -> DataFra
             F.expr(f"slice(split(text, ' '), 1, {TOKEN_REP_CAP})")
         ).alias("token"),
     )
-    vocab = salted_sum(toks, "token", {"c": "*"}, salt_source=F.col("doc_id"))
-    totals = vocab.agg(F.sum("c").alias("n_corpus"))
-    micros = F.floor(
-        (F.log2(F.col("n_corpus").cast("double")) - F.log2(F.col("c").cast("double")))
-        * F.lit(1000000.0)
-        + F.lit(0.5)
-    ).cast("bigint")
-    vocab_s = vocab.join(F.broadcast(totals)).select(
-        "token", micros.alias("micros"), "n_corpus"
-    )
+
+    def vocab_plan() -> DataFrame:
+        from .skew import salted_sum
+
+        vocab = salted_sum(toks, "token", {"c": "*"}, salt_source=F.col("doc_id"))
+        totals = vocab.agg(F.sum("c").alias("n_corpus"))
+        micros = F.floor(
+            (F.log2(F.col("n_corpus").cast("double")) - F.log2(F.col("c").cast("double")))
+            * F.lit(1000000.0)
+            + F.lit(0.5)
+        ).cast("bigint")
+        return vocab.join(F.broadcast(totals)).select(
+            "token", micros.alias("micros"), "n_corpus"
+        )
+
     if sf_dir:
+        # a committed vocab dim is read back without building vocab_plan
         vocab_s = _stage_or_checkpoint(
             spark,
-            vocab_s,
+            vocab_plan,
             "unigram_vocab",
             f"unigram_vocab|cap={TOKEN_REP_CAP}",
             sf_dir=sf_dir,
             code=(unigram_surprisal,),
         )
+    else:
+        vocab_s = vocab_plan()
+    # the corpus total N rides on every vocab row: one totals row
+    totals = vocab_s.agg(F.max("n_corpus").alias("n_corpus"))
     # OOV default = count-1 surprisal, log2(N).  N comes from the
     # broadcast totals row, NOT the left-joined vocab columns — on a miss
     # those are NULL and a vocab-derived default would be NULL too

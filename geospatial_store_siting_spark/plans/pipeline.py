@@ -5,11 +5,16 @@ Mirrors the reference's job DAG (`resources/phase2_ml_pipeline.yml:10-80`:
 validate → features → train → score → summary) re-expressed as a
 checkpointed Spark pipeline per the north rule:
 
-- each stage commit routes through sources/iceberg.write_stage: a real
-  Iceberg ``createOrReplace`` snapshot when a catalog resolves, else the
-  atomic parquet+manifest protocol of sources/snapshots.py — a crashed
-  run RESUMES: committed stages are skipped (their manifests exist),
-  only the remainder re-executes;
+- each stage is ONE sources/iceberg.write_stage call, keyed on the stage
+  name, with the stage function passed as a callable: a real Iceberg
+  ``createOrReplace`` snapshot when a catalog resolves, else the atomic
+  parquet+manifest protocol of sources/snapshots.commit.  A crashed run
+  RESUMES through write_stage's warm path: a committed stage is read
+  back without calling its function (no plan, no job), only the
+  remainder re-executes; ``--force`` rebuilds every stage.  The
+  pipeline's own resume bookkeeping is the run report next to the
+  commit: a stage whose ``_stage_report.json`` is present counts as
+  resumed;
 - each stage's run report records lineage (input stage names + row
   counts) and throughput (rows/sec, wall seconds) plus PER-PARTITION row
   counts (spark_partition_id groupBy — the skew fingerprint);
@@ -35,7 +40,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources import snapshots, tables
+from ..sources import iceberg, snapshots, tables
 
 STAGE_ROOT = os.environ.get("SPARK_GRAFT_STAGE_DIR", "/root/repo/.snapshots/stages")
 
@@ -125,38 +130,31 @@ def run_pipeline(spark: SparkSession, sf_dir: str, force: bool = False) -> dict:
         Stage("site_detail", app_queries.site_detail, ["location_features", "scored_locations"]),
     ]
 
-    from ..sources import iceberg
-
     use_iceberg = iceberg.iceberg_available(spark)
     report: dict = {"sf_dir": sf_dir, "stages": []}
     for st in stages:
-        path = report_path = None
+        # content key = stage name: fixed path per (sf, stage), the resume
+        # contract (a crashed run picks up committed stages; --force
+        # recomputes).  The run report rides NEXT TO the commit manifest
+        # ("_"-prefixed so Spark's FileIndex ignores it): a stage whose
+        # report is present was committed by an earlier run
+        report_path = None
         if not use_iceberg:
-            # content key = stage name: fixed path per (sf, stage), the
-            # resume contract (a crashed run picks up committed stages;
-            # --force recomputes)
-            path = iceberg.stage_path(None, st.name, sf_dir, content_key=st.name, root=STAGE_ROOT)
+            path = iceberg.stage_path(None, st.name, sf_dir, st.name, root=STAGE_ROOT)
             report_path = os.path.join(path, "_stage_report.json")
-            if os.path.exists(report_path) and not force:
-                with open(report_path) as f:
-                    meta = json.load(f)
-                meta["resumed"] = True
-                tables.register_stage_view(
-                    spark, st.name, snapshots.read_committed(spark, path), sf_dir
-                )
-                report["stages"].append(meta)
-                continue
-            if os.path.exists(path) and force:
-                import shutil
-
-                shutil.rmtree(path)
-
         t0 = time.perf_counter()
         committed = iceberg.write_stage(
-            spark, st.fn(spark), st.name, sf_dir,
+            spark, lambda: st.fn(spark), st.name, sf_dir,
             content_key=st.name, root=STAGE_ROOT, force=force,
         )
         wall = time.perf_counter() - t0
+        tables.register_stage_view(spark, st.name, committed, sf_dir)
+        if report_path is not None and os.path.exists(report_path):
+            with open(report_path) as f:
+                meta = json.load(f)
+            meta["resumed"] = True
+            report["stages"].append(meta)
+            continue
 
         parts = _partition_histogram(committed)
         rows = sum(parts)
@@ -174,12 +172,7 @@ def run_pipeline(spark: SparkSession, sf_dir: str, force: bool = False) -> dict:
             "resumed": False,
         }
         if report_path is not None:
-            # run report (lineage/throughput/skew) rides NEXT TO the commit
-            # manifest; "_"-prefixed so Spark's FileIndex ignores it
-            with open(report_path + ".tmp", "w") as f:
-                json.dump(meta, f)
-            os.rename(report_path + ".tmp", report_path)
-        tables.register_stage_view(spark, st.name, committed, sf_dir)
+            snapshots.write_json(report_path, meta)
         report["stages"].append(meta)
 
     return report
@@ -203,8 +196,6 @@ def main() -> None:
     spark = get_spark(app_name="gss-pipeline", cores=args.cores)
     report = run_pipeline(spark, args.sf_dir, force=args.force)
     if args.prune:
-        from ..sources import snapshots
-
         gc = snapshots.prune()
         gc_stages = snapshots.prune(root=STAGE_ROOT)
         report["pruned"] = {

@@ -15,6 +15,17 @@ touching any operator:
       --conf spark.sql.catalog.gss.warehouse=<warehouse-uri> \
       --py-files dist/gss.zip job.py
 
+One commit path: ``write_stage`` is the only way a stage is committed or
+found again — pipeline stages, operator intermediates and the bucketed
+ingest probe index all go through it.  It takes the producing DataFrame
+or a zero-argument callable; a stage already committed under its key is
+returned without calling the callable (the warm path builds no plan and
+runs no job).  A stage's identity is (name, sf_dir, content key): the
+fallback directory is ``stage_path`` (``snapshots._key`` of the three),
+the Iceberg table carries ``_table_key`` as its ``gss.content-key``
+property.  The bucket layout (``bucket=(col, n)``) goes into the Iceberg
+key and into the fallback manifest, not into the directory name.
+
 Write side uses ``writeTo(...).createOrReplace()`` (an atomic Iceberg
 snapshot commit — readers see the old snapshot until the metadata swap);
 time travel reads use ``VERSION AS OF``.  Everything degrades to the
@@ -25,6 +36,7 @@ SAME pipeline code runs in both environments.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -47,155 +59,75 @@ def iceberg_available(spark: SparkSession) -> bool:
 
 def write_stage(
     spark: SparkSession,
-    df: DataFrame,
+    df: DataFrame | Callable[[], DataFrame],
     name: str,
     sf_dir: str,
-    namespace: str = "stages",
     content_key: str | None = None,
     root: str | None = None,
     force: bool = False,
+    bucket: tuple[str, int] | None = None,
 ) -> DataFrame:
-    """Checkpoint a stage table atomically; return a reader of the
-    committed data.
+    """Checkpoint a stage table atomically, or find it again; return a
+    reader of the committed data.  The one stage commit path.
 
-    Iceberg path: ``createOrReplace`` commits ONE new table snapshot —
-    concurrent readers keep the previous snapshot until the metadata
-    pointer swaps, and a crashed writer publishes nothing.  The content
-    key rides on the table as a property (``gss.content-key``) so a
-    matching committed table is REUSED without re-executing the plan —
-    the same resume/warm-reuse contract the parquet fallback gets from
-    its content-keyed directory (without this, every call would recompute
-    and commit a fresh snapshot).  ``force=True`` always recomputes.
-    Fallback: the rename+manifest protocol of sources/snapshots.py (same
-    guarantee on a posix/rename filesystem)."""
+    ``df`` may be a zero-argument callable: when the stage is already
+    committed under its key (and not ``force``), the committed reader is
+    returned without calling it, so no plan is built and no job runs.
+    ``force=True`` always rebuilds.  ``bucket=(col, n)`` commits the
+    table hash-bucketed on ``col`` into ``n`` buckets (sorted on ``col``),
+    so a later batch-vs-table join reads this side pre-partitioned: the
+    reader scans it bucketed, with no exchange.
+
+    Iceberg path: ``createOrReplace`` commits ONE new table snapshot
+    (``partitionedBy(bucket(n, col))`` when bucketed; with
+    ``spark.sql.sources.v2.bucketing.enabled`` the same exchange elision
+    applies) — concurrent readers keep the previous snapshot until the
+    metadata pointer swaps, and a crashed writer publishes nothing.  The key rides on the table
+    as the ``gss.content-key`` property, so a matching table is reused.
+    Fallback: the write→rename→manifest protocol of
+    ``sources/snapshots.commit`` under the content-keyed ``stage_path``
+    directory (same guarantee on a posix/rename filesystem)."""
+    if content_key is None:
+        # the plan-hash key needs the plan: no warm path without a key
+        df = df() if callable(df) else df
+        content_key = _plan_key(df)
+    build = df if callable(df) else (lambda: df)
     if iceberg_available(spark):
-        ident = f"{CATALOG}.{namespace}.{name}"
-        key = f"{sf_dir}|{content_key if content_key is not None else _plan_key(df)}"
-        if not force and _iceberg_key_matches(spark, ident, key):
-            return spark.table(ident)
-        (
-            df.writeTo(ident)
-            .using("iceberg")
-            .tableProperty("gss.content-key", key)
-            .createOrReplace()
-        )
+        ident = _ident(name)
+        key = _table_key(sf_dir, content_key, bucket)
+        if force or not _iceberg_key_matches(spark, ident, key):
+            writer = (
+                build().writeTo(ident)
+                .using("iceberg")
+                .tableProperty("gss.content-key", key)
+            )
+            if bucket:
+                from pyspark.sql.functions import bucket as bucket_by
+
+                writer = writer.partitionedBy(bucket_by(bucket[1], bucket[0]))
+            writer.createOrReplace()
         return spark.table(ident)
     from . import snapshots
 
-    if force:
-        import shutil
-
-        shutil.rmtree(stage_path(df, name, sf_dir, content_key, root=root),
-                      ignore_errors=True)
-    path = stage_path(df, name, sf_dir, content_key, root=root)
-    return snapshots.commit_dataframe(spark, df, path)
-
-
-def read_stage_committed(
-    spark: SparkSession,
-    name: str,
-    sf_dir: str,
-    content_key: str,
-    namespace: str = "stages",
-    root: str | None = None,
-) -> DataFrame | None:
-    """Reader of an ALREADY-committed stage, or None — the warm-path fast
-    lane: resolves the same content-keyed identity as ``write_stage`` but
-    never needs the producing DataFrame, so a caller can skip building
-    the (possibly expensive) plan entirely when the stage is committed.
-    Returns exactly what write_stage's warm branch returns."""
-    if iceberg_available(spark):
-        ident = f"{CATALOG}.{namespace}.{name}"
-        if _iceberg_key_matches(spark, ident, f"{sf_dir}|{content_key}"):
-            return spark.table(ident)
-        return None
-    from . import snapshots
-
     path = stage_path(None, name, sf_dir, content_key, root=root)
-    if not os.path.exists(os.path.join(path, "_manifest.json")):
-        return None
-    return snapshots.read_committed(spark, path)
-
-
-def read_stage_bucketed_committed(
-    spark: SparkSession,
-    name: str,
-    sf_dir: str,
-    content_key: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    namespace: str = "stages",
-    root: str | None = None,
-) -> DataFrame | None:
-    """``read_stage_committed`` for bucketed probe stages: the committed
-    bucketed reader (exchange-free scan side) or None, without building
-    the producing plan."""
-    if iceberg_available(spark):
-        ident = f"{CATALOG}.{namespace}.{name}"
-        key = f"{sf_dir}|{content_key}|bucket:{bucket_col}x{n_buckets}"
-        if _iceberg_key_matches(spark, ident, key):
-            return spark.table(ident)
-        return None
-    from . import snapshots
-
-    path = stage_path(None, name, sf_dir, content_key, root=root)
-    manifest = os.path.join(path, "_manifest.json")
-    if not os.path.exists(manifest):
-        return None
-    snapshots.touch_manifest(manifest)
-    return snapshots.read_bucketed(spark, path)
-
-
-def write_stage_bucketed(
-    spark: SparkSession,
-    df: DataFrame,
-    name: str,
-    sf_dir: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    namespace: str = "stages",
-    content_key: str | None = None,
-    root: str | None = None,
-    force: bool = False,
-) -> DataFrame:
-    """write_stage for a corpus-sized PROBE table: committed hash-bucketed
-    on its join key so every later batch-vs-corpus join reads the corpus
-    side pre-partitioned (no corpus shuffle per batch — the O(batch)
-    ingest posture).
-
-    Iceberg path: ``partitionedBy(bucket(n, col))`` — with
-    ``spark.sql.sources.v2.bucketing.enabled`` (storage-partitioned
-    joins) the same exchange elision applies on a real cluster.
-    Fallback: a Spark-native bucketed parquet table committed under the
-    rename+manifest protocol and re-declared via DDL per session
-    (sources/snapshots.commit_bucketed)."""
-    if iceberg_available(spark):
-        from pyspark.sql.functions import bucket
-
-        ident = f"{CATALOG}.{namespace}.{name}"
-        key = f"{sf_dir}|{content_key if content_key is not None else _plan_key(df)}"
-        key += f"|bucket:{bucket_col}x{n_buckets}"
-        if not force and _iceberg_key_matches(spark, ident, key):
-            return spark.table(ident)
-        (
-            df.writeTo(ident)
-            .using("iceberg")
-            .tableProperty("gss.content-key", key)
-            .partitionedBy(bucket(n_buckets, bucket_col))
-            .createOrReplace()
-        )
-        return spark.table(ident)
-    from . import snapshots
-
-    path = stage_path(df, name, sf_dir, content_key, root=root)
     if force:
         import shutil
 
         shutil.rmtree(path, ignore_errors=True)
-    return snapshots.commit_bucketed(
-        spark, df, path, [bucket_col], n_buckets=n_buckets, sort_cols=sort_cols
-    )
+    return snapshots.commit(spark, build, path, bucket=bucket)
+
+
+def _table_key(sf_dir: str, content_key: str, bucket: tuple[str, int] | None = None) -> str:
+    """The Iceberg ``gss.content-key`` value.  The bucket layout is part
+    of it: a re-bucketed table must not match the old one.  (The
+    fallback's directory name is ``snapshots._key`` and leaves the layout
+    out, because callers locate stage directories by name and key.)"""
+    key = f"{sf_dir}|{content_key}"
+    return key + f"|bucket:{bucket[0]}x{bucket[1]}" if bucket else key
+
+
+def _ident(name: str) -> str:
+    return f"{CATALOG}.stages.{name}"
 
 
 def _plan_key(df: DataFrame) -> str:
@@ -218,7 +150,6 @@ def append_stage_bucketed(
     df: DataFrame,
     name: str,
     sf_dir: str,
-    namespace: str = "stages",
     content_key: str | None = None,
     root: str | None = None,
 ) -> int:
@@ -230,10 +161,9 @@ def append_stage_bucketed(
     a per-bucket parquet append + manifest lineage
     (sources/snapshots.append_bucketed).  Returns appended row count."""
     if iceberg_available(spark):
-        ident = f"{CATALOG}.{namespace}.{name}"
         n = df.count()
         if n:
-            df.writeTo(ident).append()
+            df.writeTo(_ident(name)).append()
         return n
     from . import snapshots
 
@@ -271,7 +201,6 @@ def read_stage_version(
     spark: SparkSession,
     name: str,
     version: int,
-    namespace: str = "stages",
     sf_dir: str | None = None,
     root: str | None = None,
 ) -> DataFrame:
@@ -289,19 +218,10 @@ def read_stage_version(
     id vs ordinal) — callers doing cross-environment replay should
     resolve versions via ``stage_history`` first."""
     if iceberg_available(spark):
-        return spark.read.option("versionAsOf", version).table(
-            f"{CATALOG}.{namespace}.{name}"
-        )
-    if sf_dir is None:
-        raise NotImplementedError(
-            "parquet-fallback time travel needs sf_dir to locate the "
-            "stage's commit history"
-        )
+        return spark.read.option("versionAsOf", version).table(_ident(name))
     from . import snapshots
 
-    versions = snapshots.stage_versions(
-        name, sf_dir, root=root or snapshots.DEFAULT_ROOT
-    )
+    versions = stage_history(spark, name, sf_dir=sf_dir, root=root)
     if not versions:
         raise FileNotFoundError(f"no committed snapshots for stage {name!r}")
     try:
@@ -318,7 +238,6 @@ def read_stage_version(
 def stage_history(
     spark: SparkSession,
     name: str,
-    namespace: str = "stages",
     sf_dir: str | None = None,
     root: str | None = None,
 ) -> list[dict]:
@@ -330,7 +249,7 @@ def stage_history(
         rows = (
             spark.sql(
                 f"SELECT snapshot_id, committed_at FROM "
-                f"{CATALOG}.{namespace}.{name}.snapshots ORDER BY committed_at"
+                f"{_ident(name)}.snapshots ORDER BY committed_at"
             ).collect()
         )
         return [
@@ -338,7 +257,9 @@ def stage_history(
             for r in rows
         ]
     if sf_dir is None:
-        raise NotImplementedError("fallback stage history needs sf_dir")
+        raise NotImplementedError(
+            "the parquet fallback needs sf_dir to locate the stage's commit history"
+        )
     from . import snapshots
 
     versions = snapshots.stage_versions(

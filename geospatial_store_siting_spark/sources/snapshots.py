@@ -14,11 +14,20 @@ stage for resumability"):
   re-executes, SURVEY §3.1) and multi-second Catalyst/codegen planning of
   giant inline expressions.
 
-- Commit protocol: write to ``<table>.tmp-<pid>``, rename to the final
-  directory, then write ``manifest.json`` last — readers treat a missing
-  manifest as an uncommitted snapshot, so a crashed writer never publishes
-  a partial table (single-writer rename-based atomicity; on a real object
-  store this is the Iceberg metadata swap).
+- Commit protocol (``commit``, the one writer of a snapshot directory:
+  geo views through ``snapshot_table``, stages through
+  ``iceberg.write_stage``): write to ``<table>.tmp-<pid>``, rename to the
+  final directory, then write ``_manifest.json`` last — readers treat a
+  missing manifest as an uncommitted snapshot, so a crashed writer never
+  publishes a partial table (single-writer rename-based atomicity; on a
+  real object store this is the Iceberg metadata swap).  ``commit`` takes
+  a callable and calls it only when nothing is committed yet, so a warm
+  read builds no plan; it reads back with the manifest's schema, so it
+  runs no job either.
+
+- A bucketed layout is recorded in the manifest (``bucket``: columns,
+  count, sort), not in the directory name; ``read_bucketed`` re-declares
+  the bucketed catalog table from it in any session.
 
 - Invalidation is content-addressed: the directory name embeds a hash of
   the defining SQL, so changing the derivation produces a new snapshot and
@@ -32,6 +41,7 @@ import json
 import os
 import shutil
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -52,20 +62,47 @@ def snapshot_table(
     defining_sql: str,
     sf_dir: str,
     root: str = DEFAULT_ROOT,
-    repartition: int | None = None,
 ) -> DataFrame:
     """Materialize ``defining_sql`` once; return a DataFrame reading the
-    committed snapshot.  Subsequent calls (any session) reuse it."""
+    committed snapshot.  Subsequent calls (any session) reuse it.  Stays
+    on parquet even where an Iceberg catalog resolves: the geo views are
+    session inputs, not pipeline stages."""
     path = os.path.join(root, _key(sf_dir, name, defining_sql))
+    return commit(spark, lambda: spark.sql(defining_sql), path)
+
+
+def commit(
+    spark: SparkSession,
+    build: Callable[[], DataFrame],
+    path: str,
+    bucket: tuple[str, int] | None = None,
+) -> DataFrame:
+    """The write→rename→manifest commit protocol — the one way a
+    snapshot directory is written.  ``build`` is a zero-argument callable
+    returning the DataFrame; it is called only when nothing is committed
+    at ``path`` yet, so a committed snapshot is reused without building
+    its plan.  Returns a reader of the committed data: ``read_committed``
+    for a plain snapshot, ``read_bucketed`` for a bucketed one.
+
+    ``bucket=(col, n)``: materialize hash-bucketed on ``col`` into ``n``
+    buckets, sorted on ``col`` (one file per bucket via the
+    pre-repartition, so the per-file order is also usable by sort-merge
+    joins).  The service posture this exists for: a corpus-sized probe
+    table committed ONCE, where every later batch join shuffles ONLY the
+    batch side."""
     manifest = os.path.join(path, "_manifest.json")  # "_" prefix: ignored by Spark's FileIndex
+    spec = None
+    if bucket:
+        col, n = bucket
+        spec = {"cols": [col], "n": n, "sort": [col]}
     if not os.path.exists(manifest):
         if not os.path.exists(path):
-            df = spark.sql(defining_sql)
-            if repartition:
-                df = df.repartition(repartition)
             tmp = f"{path}.tmp-{os.getpid()}"
-            df.write.mode("overwrite").parquet(tmp)
-            os.makedirs(root, exist_ok=True)
+            if spec:
+                _write_bucketed(spark, build(), tmp, spec)
+            else:
+                build().write.mode("overwrite").parquet(tmp)
+            os.makedirs(os.path.dirname(path), exist_ok=True)
             if os.path.exists(path):  # lost a race: another writer committed
                 shutil.rmtree(tmp, ignore_errors=True)
             else:
@@ -77,16 +114,27 @@ def snapshot_table(
             # forever and resume treats the stage as uncommitted.
             committed = spark.read.parquet(path)
             meta = {
-                "table": name,
+                "path": path,
                 "rows": committed.count(),
-                "sf_dir": sf_dir,
                 "committed_at": time.time(),
                 "schema": committed.schema.jsonValue(),
             }
-            with open(manifest + f".tmp-{os.getpid()}", "w") as f:
-                json.dump(meta, f)
-            os.rename(manifest + f".tmp-{os.getpid()}", manifest)
+            if spec:
+                meta["bucket"] = spec
+            write_json(manifest, meta)
+    if spec:
+        touch_manifest(manifest)  # reuse: GC ranks live keys above stale ones
+        return read_bucketed(spark, path)
     return read_committed(spark, path)
+
+
+def write_json(path: str, meta: dict) -> None:
+    """Atomic JSON (re)write of a manifest or run report: tmp file, then
+    rename over."""
+    tmp = path + f".tmp-{os.getpid()}"
+    with open(tmp, "w") as f:
+        json.dump(meta, f)
+    os.rename(tmp, path)
 
 
 def read_committed(spark: SparkSession, path: str, touch: bool = True) -> DataFrame:
@@ -116,11 +164,8 @@ def _load_manifest(manifest: str) -> dict | None:
 
 
 def read_manifest(sf_dir: str, name: str, defining_sql: str, root: str = DEFAULT_ROOT):
-    path = os.path.join(root, _key(sf_dir, name, defining_sql), "_manifest.json")
-    if os.path.exists(path):
-        with open(path) as f:
-            return json.load(f)
-    return None
+    path = os.path.join(root, _key(sf_dir, name, defining_sql))
+    return _load_manifest(os.path.join(path, "_manifest.json"))
 
 
 def touch_manifest(manifest: str, min_interval_sec: float = 3600) -> dict | None:
@@ -139,10 +184,7 @@ def touch_manifest(manifest: str, min_interval_sec: float = 3600) -> dict | None
     if now - meta.get("last_used_at", meta.get("committed_at", 0)) < min_interval_sec:
         return meta
     meta["last_used_at"] = now
-    tmp = manifest + f".tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.rename(tmp, manifest)
+    write_json(manifest, meta)
     return meta
 
 
@@ -194,15 +236,8 @@ def prune(
         m = re.match(_KEY_DIR_RE, d)
         if not m:
             continue  # foreign tree: never ours to delete
-        committed = None
-        manifest = os.path.join(full, "_manifest.json")
-        if os.path.exists(manifest):
-            try:
-                with open(manifest) as f:
-                    meta = json.load(f)
-                committed = meta.get("last_used_at", meta.get("committed_at"))
-            except (OSError, ValueError):
-                committed = None
+        meta = _load_manifest(os.path.join(full, "_manifest.json"))
+        committed = meta.get("last_used_at", meta.get("committed_at")) if meta else None
         groups.setdefault(m.group(1), []).append((committed, d, full))
     for entries in groups.values():
         committed_e = sorted(
@@ -245,14 +280,9 @@ def stage_versions(name: str, sf_dir: str, root: str = DEFAULT_ROOT) -> list[dic
     for d in sorted(os.listdir(root)):
         if not pat.fullmatch(d):
             continue
-        manifest = os.path.join(root, d, "_manifest.json")
-        if not os.path.exists(manifest):
+        meta = _load_manifest(os.path.join(root, d, "_manifest.json"))
+        if meta is None:
             continue  # uncommitted writer / crashed commit: not a version
-        try:
-            with open(manifest) as f:
-                meta = json.load(f)
-        except (OSError, ValueError):
-            continue
         out.append(
             {
                 "dir": d,
@@ -309,62 +339,29 @@ def read_bucketed(spark: SparkSession, path: str) -> DataFrame:
     return spark.table(tbl)
 
 
-def commit_bucketed(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-) -> DataFrame:
-    """commit_dataframe's bucketed twin: materialize ``df`` hash-bucketed
-    on ``bucket_cols`` (one file per bucket via the pre-repartition, so
-    the per-file ``sortBy`` order is also usable by sort-merge joins)
-    under the same write→rename→manifest atomic protocol.  The service
-    posture this exists for: a corpus-sized probe table committed ONCE,
-    where every later batch join shuffles ONLY the batch side."""
-    manifest = os.path.join(path, "_manifest.json")
-    if not os.path.exists(manifest):
-        if not os.path.exists(path):
-            tmp = f"{path}.tmp-{os.getpid()}"
-            shutil.rmtree(tmp, ignore_errors=True)
-            # bucketBy only exists on saveAsTable: write through a
-            # transient external table at the tmp path, then drop the
-            # catalog entry (external: files stay) and rename
-            tmp_tbl = f"{_bucket_table_name(path)}_w{os.getpid()}"
-            spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
-            writer = (
-                df.repartition(n_buckets, *bucket_cols)
-                .write.bucketBy(n_buckets, *bucket_cols)
-            )
-            if sort_cols:
-                writer = writer.sortBy(*sort_cols)
-            writer.option("path", tmp).mode("overwrite").saveAsTable(tmp_tbl)
-            spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            if os.path.exists(path):  # lost a race: another writer committed
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                os.rename(tmp, path)
-        if not os.path.exists(manifest):
-            committed = spark.read.parquet(path)
-            meta = {
-                "path": path,
-                "rows": committed.count(),
-                "committed_at": time.time(),
-                "schema": committed.schema.jsonValue(),
-                "bucket": {
-                    "cols": list(bucket_cols),
-                    "n": n_buckets,
-                    "sort": list(sort_cols or []),
-                },
-            }
-            with open(manifest + f".tmp-{os.getpid()}", "w") as f:
-                json.dump(meta, f)
-            os.rename(manifest + f".tmp-{os.getpid()}", manifest)
-    else:
-        touch_manifest(manifest)  # reuse: GC ranks live keys above stale ones
-    return read_bucketed(spark, path)
+def _write_bucketed(
+    spark: SparkSession, df: DataFrame, path: str, spec: dict, table: str | None = None
+) -> None:
+    """Write ``df`` hash-bucketed per a manifest bucket ``spec`` at
+    ``path``.  bucketBy only exists on saveAsTable: with no ``table``,
+    write through a transient external table at ``path`` and drop the
+    catalog entry after (external: files stay); with one, append to that
+    declared table."""
+    transient = table is None
+    if transient:
+        shutil.rmtree(path, ignore_errors=True)
+        table = f"{_bucket_table_name(path)}_w{os.getpid()}"
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    writer = (
+        df.repartition(spec["n"], *spec["cols"])
+        .write.bucketBy(spec["n"], *spec["cols"])
+    )
+    if spec.get("sort"):
+        writer = writer.sortBy(*spec["sort"])
+    mode = "overwrite" if transient else "append"
+    writer.mode(mode).option("path", path).saveAsTable(table)
+    if transient:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def append_bucketed(spark: SparkSession, df: DataFrame, path: str) -> int:
@@ -396,19 +393,10 @@ def append_bucketed(spark: SparkSession, df: DataFrame, path: str) -> int:
     if n_rows == 0:
         return 0
     read_bucketed(spark, path)  # ensure the catalog table exists
-    writer = (
-        aligned.repartition(b["n"], *b["cols"])
-        .write.bucketBy(b["n"], *b["cols"])
-    )
-    if b.get("sort"):
-        writer = writer.sortBy(*b["sort"])
-    writer.mode("append").option("path", path).saveAsTable(_bucket_table_name(path))
+    _write_bucketed(spark, aligned, path, b, table=_bucket_table_name(path))
     meta["rows"] = int(meta.get("rows", 0)) + n_rows
     meta.setdefault("appends", []).append({"rows": n_rows, "at": time.time()})
-    tmp = manifest + f".tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.rename(tmp, manifest)
+    write_json(manifest, meta)
     # the catalog caches file listings for the table: refresh so readers
     # in this session see the appended files immediately
     spark.catalog.refreshTable(_bucket_table_name(path))
@@ -449,17 +437,7 @@ def compact_bucketed(spark: SparkSession, path: str) -> dict:
     # manifest is rewritten below from ``meta``
     current = read_committed(spark, path, touch=False)
     tmp = f"{path}.compact-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    tmp_tbl = f"{_bucket_table_name(path)}_c{os.getpid()}"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
-    writer = (
-        current.repartition(b["n"], *b["cols"])
-        .write.bucketBy(b["n"], *b["cols"])
-    )
-    if b.get("sort"):
-        writer = writer.sortBy(*b["sort"])
-    writer.option("path", tmp).mode("overwrite").saveAsTable(tmp_tbl)
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
+    _write_bucketed(spark, current, tmp, b)
     # swap: keep the old directory until the new one is in place
     old = f"{path}.precompact-{os.getpid()}"
     os.rename(path, old)
@@ -468,10 +446,7 @@ def compact_bucketed(spark: SparkSession, path: str) -> dict:
     meta.setdefault("compactions", []).append(
         {"at": time.time(), "files_before": files_before}
     )
-    mtmp = manifest + f".tmp-{os.getpid()}"
-    with open(mtmp, "w") as f:
-        json.dump(meta, f)
-    os.rename(mtmp, manifest)
+    write_json(manifest, meta)
     # drop + re-declare: the swapped directory has new files
     spark.sql(f"DROP TABLE IF EXISTS {_bucket_table_name(path)}")
     read_bucketed(spark, path)
@@ -480,32 +455,3 @@ def compact_bucketed(spark: SparkSession, path: str) -> dict:
         "files_after": _nfiles(path),
         "rows": int(meta.get("rows", 0)),
     }
-
-
-def commit_dataframe(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    """The write→rename→manifest commit protocol for an arbitrary
-    DataFrame (the generic form of snapshot_table's SQL path; the Iceberg
-    adapter's fallback).  Returns a reader of the committed data; an
-    existing committed snapshot at ``path`` is reused."""
-    manifest = os.path.join(path, "_manifest.json")
-    if not os.path.exists(manifest):
-        if not os.path.exists(path):
-            tmp = f"{path}.tmp-{os.getpid()}"
-            df.write.mode("overwrite").parquet(tmp)
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            if os.path.exists(path):  # lost a race: another writer committed
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                os.rename(tmp, path)
-        if not os.path.exists(manifest):
-            committed = spark.read.parquet(path)
-            meta = {
-                "path": path,
-                "rows": committed.count(),
-                "committed_at": time.time(),
-                "schema": committed.schema.jsonValue(),
-            }
-            with open(manifest + f".tmp-{os.getpid()}", "w") as f:
-                json.dump(meta, f)
-            os.rename(manifest + f".tmp-{os.getpid()}", manifest)
-    return read_committed(spark, path)

@@ -19,16 +19,27 @@ equals the batch twin — the exactly-once equivalence that matters.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources import snapshots
+
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
 )
+
+
+def _stream_dir(table: str, sf_dir: str) -> str:
+    """Staging directory of a bounded file stream, committed through
+    snapshots.commit (built once, reused by every later stream)."""
+    sf_tag = os.path.basename(sf_dir.rstrip("/"))
+    return os.path.join(snapshots.DEFAULT_ROOT, f"stream_{table}_{sf_tag}")
 
 
 def events_stream(spark: SparkSession, sf_dir: str, max_files: int = 1) -> DataFrame:
@@ -41,19 +52,12 @@ def events_stream(spark: SparkSession, sf_dir: str, max_files: int = 1) -> DataF
     arrive in event-time order — otherwise the watermark races ahead on
     the first batch and drops everything else as late (exactly what a
     production replay from time-ordered partitions provides)."""
-    import os
-
-    stage_dir = os.path.join(
-        os.environ.get("SPARK_GRAFT_SNAPSHOT_DIR", "/root/repo/.snapshots"),
-        f"stream_events_{os.path.basename(sf_dir.rstrip('/'))}",
+    stage_dir = _stream_dir("events", sf_dir)
+    snapshots.commit(
+        spark,
+        lambda: spark.read.parquet(f"{sf_dir}/events.parquet").repartitionByRange(4, "ts"),
+        stage_dir,
     )
-    if not os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
-        (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-            .repartitionByRange(4, "ts")
-            .write.mode("overwrite")
-            .parquet(stage_dir)
-        )
     return (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", max_files)
@@ -249,23 +253,12 @@ def documents_stream(spark: SparkSession, sf_dir: str, max_files: int = 1) -> Da
     """The documents table as a bounded 4-file stream (same staging trick
     as events_stream; order doesn't matter here — the rollup is not
     event-time windowed)."""
-    import os
-
-    src = f"{sf_dir}/documents.parquet"
-    stage_dir = os.path.join(
-        os.environ.get("SPARK_GRAFT_SNAPSHOT_DIR", "/root/repo/.snapshots"),
-        f"stream_documents_{os.path.basename(sf_dir.rstrip('/'))}",
+    stage_dir = _stream_dir("documents", sf_dir)
+    staged = snapshots.commit(
+        spark, lambda: spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(4), stage_dir
     )
-    if not os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
-        (
-            spark.read.parquet(src)
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(stage_dir)
-        )
-    schema = spark.read.parquet(src).schema
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(staged.schema)
         .option("maxFilesPerTrigger", max_files)
         .parquet(stage_dir)
     )

@@ -841,7 +841,7 @@ class TestIngestProbeIndex:
         df = spark.range(1000).select(
             F.col("id").alias("k"), F.xxhash64("id").alias("v")
         )
-        first = snapshots.commit_bucketed(spark, df, path, ["k"], 8, ["k"])
+        first = snapshots.commit(spark, lambda: df, path, bucket=("k", 8))
         assert first.count() == 1000
         # simulate a fresh session: drop the catalog entry, keep the files
         spark.sql(f"DROP TABLE {snapshots._bucket_table_name(path)}")

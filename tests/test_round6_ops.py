@@ -52,24 +52,36 @@ class TestStageWarmFastLane:
 
     def test_key_mismatch_falls_through_to_write(self, spark, tmp_path):
         sf_dir = str(tmp_path / "sf")
-        assert (
-            iceberg.read_stage_committed(spark, "r6_absent", sf_dir, "no-such-key")
-            is None
+        iceberg.write_stage(
+            spark, lambda: spark.range(2), "r6_absent", sf_dir, content_key="old-key"
         )
+        calls = []
+
+        def build():
+            calls.append(1)
+            return spark.range(3)
+
+        fresh = iceberg.write_stage(
+            spark, build, "r6_absent", sf_dir, content_key="no-such-key"
+        )
+        assert calls == [1]
+        assert fresh.count() == 3
 
     def test_bucketed_fast_lane_matches_writer(self, spark, tmp_path):
         sf_dir = str(tmp_path / "sf")
         df = spark.range(20).select(
             F.col("id").alias("fp"), (F.col("id") % 3).alias("exact_match")
         )
-        written = iceberg.write_stage_bucketed(
-            spark, df, "r6_bidx", sf_dir, bucket_col="fp", n_buckets=4,
-            sort_cols=["fp"], content_key="r6-bidx|v1",
+        written = iceberg.write_stage(
+            spark, df, "r6_bidx", sf_dir, content_key="r6-bidx|v1", bucket=("fp", 4),
         )
-        fast = iceberg.read_stage_bucketed_committed(
-            spark, "r6_bidx", sf_dir, "r6-bidx|v1", bucket_col="fp", n_buckets=4
+
+        def boom():
+            raise AssertionError("plan constructed on the warm path")
+
+        fast = iceberg.write_stage(
+            spark, boom, "r6_bidx", sf_dir, content_key="r6-bidx|v1", bucket=("fp", 4),
         )
-        assert fast is not None
         assert fast.count() == written.count() == 20
         # the fast-lane reader keeps the bucketed (exchange-free) scan side
         plan = (
@@ -77,6 +89,46 @@ class TestStageWarmFastLane:
             .executedPlan().toString()
         )
         assert "Bucketed: true" in plan
+
+
+    def test_unigram_vocab_stage_skips_vocab_plan(self, geo, monkeypatch):
+        """With the unigram_vocab stage committed, unigram_surprisal reads
+        it back without building the vocabulary plan."""
+        from geospatial_store_siting_spark.operators import skew, text_ops
+        from tests.conftest import SF_DIR
+
+        def scores():
+            out = text_ops.unigram_surprisal(geo, sf_dir=SF_DIR).toPandas()
+            return out.sort_values("doc_id").reset_index(drop=True)
+
+        first = scores()
+
+        def boom(*args, **kwargs):
+            raise AssertionError("vocabulary plan built on the warm path")
+
+        monkeypatch.setattr(skew, "salted_sum", boom)
+        assert scores().equals(first)
+
+
+class TestExactProbeShape:
+    def test_exact_probe_is_left_outer_build_left_hash_join(self, geo, monkeypatch):
+        """Above the gate the exact probe of dedup_incremental is ONE
+        shuffled-hash join on fp, LeftOuter with the batch as the build
+        (left) side, and nothing is broadcast."""
+        import re
+
+        from tests.conftest import SF_DIR
+
+        monkeypatch.setattr(dedup, "DEDUP_BROADCAST_DOC_LIMIT", 0)
+        plan = (
+            dedup.dedup_incremental(geo, sf_dir=SF_DIR)
+            ._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        )
+        assert "BroadcastExchange" not in plan
+        probes = re.findall(
+            r"ShuffledHashJoin \[fp#\d+\], \[fp#\d+\], LeftOuter, BuildLeft", plan
+        )
+        assert len(probes) == 1, plan
 
 
 class TestRowGroupStatsGuard:

@@ -1,10 +1,15 @@
 """Committed-snapshot reads: the manifest's recorded schema replaces
-parquet schema inference, so a warm read launches no Spark job."""
+parquet schema inference, so a warm read launches no Spark job.  The one
+stage commit path: its key forms are pinned, and its warm path calls no
+producing callable."""
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+
+import pytest
 
 from geospatial_store_siting_spark.sources import iceberg, snapshots
 from tests.conftest import launched_jobs
@@ -22,7 +27,7 @@ def _frame(spark):
 
 def test_read_committed_matches_inference_without_a_job(spark, tmp_path):
     path = str(tmp_path / "snap")
-    snapshots.commit_dataframe(spark, _frame(spark), path)
+    snapshots.commit(spark, lambda: _frame(spark), path)
     with launched_jobs(spark) as jobs:
         got = snapshots.read_committed(spark, path)
     assert jobs == []
@@ -33,7 +38,7 @@ def test_read_committed_matches_inference_without_a_job(spark, tmp_path):
 
 def test_read_committed_infers_without_a_recorded_schema(spark, tmp_path):
     path = str(tmp_path / "snap")
-    snapshots.commit_dataframe(spark, _frame(spark), path)
+    snapshots.commit(spark, lambda: _frame(spark), path)
     manifest = os.path.join(path, "_manifest.json")
     with open(manifest) as f:
         meta = json.load(f)
@@ -55,7 +60,7 @@ def test_warm_stage_reads_launch_no_job(spark, tmp_path):
     sql = "SELECT id AS site_id, CAST(id AS string) AS note FROM range(4)"
     snapshots.snapshot_table(spark, "warm_sql", sql, sf_dir, root=root)
     with launched_jobs(spark) as jobs:
-        fast = iceberg.read_stage_committed(spark, "warm", sf_dir, "k", root=root)
+        fast = iceberg.write_stage(spark, _boom, "warm", sf_dir, content_key="k", root=root)
         again = iceberg.write_stage(
             spark, _frame(spark), "warm", sf_dir, content_key="k", root=root
         )
@@ -64,3 +69,54 @@ def test_warm_stage_reads_launch_no_job(spark, tmp_path):
     assert fast.schema == again.schema
     assert fast.dtypes == _frame(spark).dtypes
     assert snap.columns == ["site_id", "note"]
+
+
+def _boom():
+    raise AssertionError("plan constructed on the warm path")
+
+
+def test_stage_key_forms_are_pinned():
+    """Both key forms of a stage: the fallback directory name and the
+    Iceberg ``gss.content-key`` value.  A change to either cold-starts
+    every committed stage, so they are golden here."""
+    digest = hashlib.md5(b"/x/sf0.01|stg|k").hexdigest()[:12]
+    path = iceberg.stage_path(None, "stg", "/x/sf0.01", "k")
+    assert os.path.basename(path) == "sf0.01_stg_" + digest
+    assert iceberg._table_key("/x/sf0.01", "k") == "/x/sf0.01|k"
+    assert iceberg._table_key("/x/sf0.01", "k", ("fp", 4)) == "/x/sf0.01|k|bucket:fpx4"
+
+
+def _plain(spark, build, root, monkeypatch):
+    return iceberg.write_stage(spark, build, "plain", "warm-path", content_key="k", root=root)
+
+
+def _bucketed(spark, build, root, monkeypatch):
+    return iceberg.write_stage(
+        spark, build, "bkt", "warm-path", content_key="k", root=root, bucket=("site_id", 4)
+    )
+
+
+def _view(spark, build, root, monkeypatch):
+    # a view's producer is spark.sql(defining_sql): ``build`` stands in for it
+    monkeypatch.setattr(spark, "sql", lambda _sql: build())
+    return snapshots.snapshot_table(spark, "view", "SELECT 1", "warm-path", root=root)
+
+
+@pytest.mark.parametrize("commit", [_plain, _bucketed, _view], ids=["plain", "bucketed", "view"])
+def test_warm_commit_builds_nothing(spark, tmp_path, monkeypatch, commit):
+    """A second commit of the same key returns the committed reader
+    without calling the producer and without launching a job."""
+    root = str(tmp_path)
+    cold = commit(spark, lambda: _frame(spark), root, monkeypatch)
+    with launched_jobs(spark) as jobs:
+        warm = commit(spark, _boom, root, monkeypatch)
+    assert jobs == []
+    monkeypatch.undo()
+    assert warm.schema == cold.schema
+    assert sorted(warm.collect()) == sorted(cold.collect())
+    if commit is _bucketed:
+        plan = (
+            warm.groupBy("site_id").count()._jdf.queryExecution()  # noqa: SLF001
+            .executedPlan().toString()
+        )
+        assert "Bucketed: true" in plan
