@@ -1,14 +1,19 @@
-"""PIP at scale: mapInPandas bucketed ray-cast vs the shuffle-free JVM
-broadcast cover join, on the sites table replicated REPL× (~1M points at
-sf0.1 with the default 256, ~3.8M points).
+"""PIP at scale: ``pip_join``'s two cover placements, on the sites table
+replicated REPL× (~3.8M points at sf0.1 with the default 256).
 
-Both plans produce the identical assignment (oracle-checked at sf0.01 by
-``pip_cover_assignments`` / ``pip_index_assignments``); this harness
-measures the cost of keeping PIP membership inside whole-stage codegen
-(cell equi-join + half-plane refinement of the boundary ring) vs routing
-every point through an Arrow/Python kernel.  The cover join is the
-100-TB path: per-point work is O(candidates-in-cell), the polygon layer
-is a broadcast dim, and the plan has no Exchange at all.
+- broadcast: the synthetic polygon list, polyfilled on the driver and
+  broadcast; per-point work is O(candidates-in-cell), the boundary ring
+  is refined by the SQL ray cast, and the plan has no Exchange and no
+  Python at all;
+- shuffled: the same layer replicated POLY_REPL× with shifted longitudes
+  (new geography, constant density) as a ``polygons_df`` DataFrame, the
+  census-scale input: distributed polyfill + SHUFFLE_HASH cover join.
+
+Both produce the assignment the declared queries check against one
+oracle at sf0.01 (``pip_assignments_oracle_sql``).
+
+    PIP_SCALE_REPL=32 PIP_SCALE_POLY_REPL=64 SPARK_GRAFT_CPUS=4 \
+        python BENCH/pip_scale.py
 """
 
 from __future__ import annotations
@@ -62,17 +67,13 @@ def main() -> None:
             best = d if best is None else min(best, d)
         return best
 
-    t_cover = run(lambda: pip.pip_cover_join(spark, points=pts))
-    t_hybrid = run(lambda: pip.pip_join_hybrid(spark, points=pts))
-    t_kernel = run(
+    t_bcast = run(
         lambda: pip.pip_join(spark, points=pts).select("site_id", "poly_id", "poly_zone")
     )
 
-    # --- big-layer regime: a polygon layer too big to broadcast.  The
-    # synthetic 30-zone layer replicated POLY_REPL× with shifted longitudes
-    # (new geography, constant density), points shifted identically — the
-    # regime pip_cover_join_distributed exists for: distributed polyfill +
-    # SHUFFLE_HASH cover join, no driver geometry, no broadcast.
+    # --- big-layer regime: a polygon layer too big to broadcast, points
+    # shifted like the polygons — pip_join's DataFrame input: distributed
+    # polyfill + SHUFFLE_HASH cover join, no driver geometry, no broadcast.
     poly_repl = int(os.environ.get("PIP_SCALE_POLY_REPL", "512"))
     base_polys = pip.synthetic_polygons()
     big_layer = [
@@ -96,19 +97,14 @@ def main() -> None:
     ).drop("cq", "cr")
     n_polys = layer_df.count()
     t0 = time.perf_counter()
-    pip.pip_cover_join_distributed(spark, points=big_pts, polys=layer_df) \
+    pip.pip_join(spark, points=big_pts, polys=layer_df) \
         .write.mode("overwrite").format("noop").save()
     t_dist = time.perf_counter() - t0
 
     result = {
         "points": n_pts,
-        "cover_join_sec": round(t_cover, 2),
-        "cover_join_rows_per_sec": round(n_pts / t_cover, 1),
-        "hybrid_join_sec": round(t_hybrid, 2),
-        "hybrid_join_rows_per_sec": round(n_pts / t_hybrid, 1),
-        "kernel_join_sec": round(t_kernel, 2),
-        "kernel_join_rows_per_sec": round(n_pts / t_kernel, 1),
-        "speedup": round(t_kernel / t_cover, 2),
+        "broadcast_join_sec": round(t_bcast, 2),
+        "broadcast_join_rows_per_sec": round(n_pts / t_bcast, 1),
         "big_layer": {
             "polygons": n_polys,
             "distributed_join_sec": round(t_dist, 2),
@@ -124,31 +120,24 @@ def main() -> None:
         os.path.join(REPO, "BENCH", "BASELINE.md"),
         "\n## PIP at scale",
         (
-            f"\n## PIP at scale — cover join vs Python kernel, {n_pts:,} points, "
-            f"local[{cores}]\n\n"
-            f"| plan | wall | rows/s | note |\n|---|---|---|---|\n"
-            f"| JVM broadcast cover join (`pip_cover_join`) | {result['cover_join_sec']} s "
-            f"| {result['cover_join_rows_per_sec']:,.0f} | Scan→BroadcastHashJoin→Project, "
-            f"zero Exchange, zero Python; boundary ring refined by half-plane SQL |\n"
-            f"| hybrid: interior JVM, boundary rim via kernel (`pip_join_hybrid`, "
-            f"general polygons) | {result['hybrid_join_sec']} s "
-            f"| {result['hybrid_join_rows_per_sec']:,.0f} | only points whose first "
-            f"cover candidate is a boundary cell cross into Python (~10% of cover cells) |\n"
-            f"| mapInPandas bucketed ray-cast (`pip_join`) | {result['kernel_join_sec']} s "
-            f"| {result['kernel_join_rows_per_sec']:,.0f} | every point crosses the "
-            f"Arrow boundary into the numpy kernel |\n\n"
-            f"**{result['speedup']}×** for keeping PIP membership JVM-side. All three\n"
-            f"plans are value-identical (one oracle, `pip_assignments_oracle_sql`).\n"
-            f"The cover join is the 100-TB default for convex layers (half-plane\n"
-            f"refinement is exact); the hybrid is the default for arbitrary simple\n"
-            f"polygons — interior hits stay in codegen, only the rim pays Arrow.\n\n"
-            f"**Big-layer regime** ({result['big_layer']['polygons']:,} polygons — the\n"
-            f"layer no longer broadcasts): `pip_cover_join_distributed` (distributed\n"
-            f"polyfill + SHUFFLE_HASH cover join + boundary-only Arrow refine) assigns\n"
-            f"the same {n_pts:,} points in {result['big_layer']['distributed_join_sec']} s\n"
-            f"({result['big_layer']['distributed_rows_per_sec']:,.0f} rows/s) with zero\n"
-            f"broadcast and zero driver-side geometry — the plan that survives a\n"
-            f"census-scale boundary table.\n"
+            f"\n## PIP at scale — `pip_join`, {n_pts:,} points, local[{cores}]\n\n"
+            f"| polygon input | cover placement | polygons | wall | rows/s |\n"
+            f"|---|---|---|---|---|\n"
+            f"| list (synthetic layer) | driver polyfill, broadcast "
+            f"| {len(base_polys)} "
+            f"| {result['broadcast_join_sec']} s "
+            f"| {result['broadcast_join_rows_per_sec']:,.0f} |\n"
+            f"| `polygons_df` DataFrame | distributed polyfill, SHUFFLE_HASH join "
+            f"| {result['big_layer']['polygons']:,} "
+            f"| {result['big_layer']['distributed_join_sec']} s "
+            f"| {result['big_layer']['distributed_rows_per_sec']:,.0f} |\n\n"
+            f"The broadcast plan is Scan→BroadcastHashJoin→Project with no Exchange\n"
+            f"and no Python: interior cells are decided by the cell join, boundary\n"
+            f"cells by the even-odd ray cast in SQL.  The DataFrame plan keeps the\n"
+            f"layer off the driver and out of any broadcast; only its boundary\n"
+            f"candidates cross into the Arrow ray-cast kernel.  The broadcast wall is\n"
+            f"the best of 2 warm runs; the shuffled wall is one run including its\n"
+            f"distributed polyfill.\n"
         ),
     )
     spark.stop()

@@ -138,6 +138,8 @@ def _qsf(fn) -> Callable[[SparkSession, str], DataFrame]:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    # three declared PIP names, one broadcast pip_join (they share an oracle)
+    pip_assignments = _q(lambda s: pip.pip_join(s).select("site_id", "poly_id", "poly_zone"))
     return {
         # --- hex feature engineering (SURVEY §2.3 J1-J9, §2.4) ---
         "hex_feature_join": _q(features.location_features),
@@ -262,13 +264,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "metro_center_distance": _q(rings.metro_center_distance),
         "parent_rollup": _q(rings.parent_rollup),
         "pip_convex_zones": _q(pip.pip_convex_join),
-        "pip_index_assignments": _q(
-            lambda s: pip.pip_join(s).select("site_id", "poly_id", "poly_zone")
-        ),
-        "pip_cover_assignments": _q(pip.pip_cover_join),
-        "pip_hybrid_assignments": _q(pip.pip_join_hybrid),
+        "pip_index_assignments": pip_assignments,
+        "pip_cover_assignments": pip_assignments,
+        "pip_hybrid_assignments": pip_assignments,
         "doc_zone_counts": _q(pip.doc_zone_counts),
-        "pip_distributed_assignments": _q(pip.pip_cover_join_distributed),
+        "pip_distributed_assignments": _q(
+            lambda s: pip.pip_join(s, polys=pip.polygons_df(s)).select(
+                "site_id", "poly_id", "poly_zone"
+            )
+        ),
         "zonal_stats": _q(zonal.zonal_stats),
         "hotspot_gi": _q(hotspots.hotspot_gi),
         "hotspot_clusters": _qsf(hotspots.hotspot_clusters),

@@ -44,17 +44,3 @@ def make_kring_udf(k: int = 1):
         return pd.Series(list(rings))
 
     return kring_udf
-
-
-def centroid_udfs():
-    @F.pandas_udf("double")
-    def cen_lat(cell: pd.Series) -> pd.Series:
-        lat, _ = hexgrid.cell_to_latlng(cell.to_numpy(dtype=np.int64))
-        return pd.Series(lat)
-
-    @F.pandas_udf("double")
-    def cen_lon(cell: pd.Series) -> pd.Series:
-        _, lon = hexgrid.cell_to_latlng(cell.to_numpy(dtype=np.int64))
-        return pd.Series(lon)
-
-    return cen_lat, cen_lon

@@ -1,23 +1,30 @@
-"""Point-in-polygon trade-area joins via a cell-bucketed broadcast index.
+"""Point-in-polygon trade-area joins: one join over a hex-cell cover.
 
 North-star requirement (absent in the reference, which substitutes hex
 membership for PIP — SURVEY §2.9 G7): join points against census/boundary
-polygons using an R-tree/cell-bucketed broadcast index inside vectorized
-Arrow batches.
+polygons through a cell-bucketed index, never per-row Python.
 
-Two layers:
+``pip_join`` is the one PIP join.  Each polygon's res-8 cover is built
+once (``polygon_cell_cover``: convex or concave rings, with holes); a
+cover cell is INTERIOR (the hex lies wholly inside the polygon, so the
+cell equi-join alone decides membership) or BOUNDARY (the exact test
+decides).  Points join the cover on their ``h3_res8`` cell, and the
+first accepted candidate in priority order (cores before areas, then
+``poly_id``) wins.  Where the cover lives follows from the type of the
+polygon input:
 
-- ``pip_join`` — the general engine path: polygons (any simple ring) are
-  broadcast as a numpy vertex table bucketed by the res-7 cells their
-  bounding boxes overlap; a ``mapInPandas`` kernel does vectorized
-  ray-casting per Arrow batch, probing only the polygons bucketed under
-  each point's coarse cell.  O(|points| · avg bucket size), never
-  |points|×|polygons|.
+- a ``list`` (or ``None``: the synthetic layer) is polyfilled on the
+  driver and broadcast — Scan → BroadcastHashJoin → Project, no Exchange
+  and no Python;
+- a ``DataFrame`` (the ``polygons_df`` contract, census-scale layers) is
+  polyfilled across executors (``polyfill_distributed``) and joined by a
+  shuffle hash join, resolved by one ``min(struct)`` aggregate.
 
-- ``pip_convex_join`` — the oracle-checkable twin over the synthetic
-  boundary layer: deterministic convex polygons (hexagonal trade zones
-  around each metro center) tested with half-plane inequalities — pure
-  arithmetic, identical in any engine.
+The exact test is one rule, even-odd ray casting over every ring: SQL in
+the broadcast branch (``_ray_cast_sql``), an Arrow/numpy kernel over the
+boundary candidates only in the shuffle branch (``_ray_cast_rings``).
+The two agree bit for bit.  The half-plane CASE (``pip_zone_case_sql``)
+survives only as the oracle twin in DuckDB-checkable SQL.
 
 The synthetic boundary layer (one polygon per metro ring) is the
 "boundary" table of BASELINE.json's "synthetic POI+boundary" posture.
@@ -28,12 +35,11 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import METROS
+from ..config import HEX_SIZE_DEG, METROS, RES_TRADE_AREA
 from ..functions import hexgrid, hex_sql
 
 # Synthetic boundary layer: for each metro, 2 concentric hexagonal zones
@@ -67,53 +73,8 @@ def synthetic_polygons() -> list[dict]:
 
 
 # ---------------------------------------------------------------------------
-# General path: cell-bucketed broadcast index + vectorized ray casting
+# The exact test: even-odd ray casting (numpy kernel and its SQL twin)
 # ---------------------------------------------------------------------------
-
-class PolygonIndex:
-    """Broadcast-side index: polygon vertex arrays + coarse-cell buckets."""
-
-    def __init__(self, polys: list[dict], res: int = 7):
-        self.res = res
-        self.polys = polys
-        self.buckets: dict[int, list[int]] = {}
-        for i, p in enumerate(polys):
-            vs = np.asarray(p["verts"], dtype=np.float64)
-            lat_lo, lon_lo = vs.min(axis=0)
-            lat_hi, lon_hi = vs.max(axis=0)
-            # all coarse cells overlapped by the bbox (vectorized lattice scan)
-            from ..config import HEX_SIZE_DEG
-
-            step = HEX_SIZE_DEG[res] * 0.8
-            lats = np.arange(lat_lo - step, lat_hi + step, step)
-            lons = np.arange(lon_lo - step, lon_hi + step, step)
-            glat, glon = np.meshgrid(lats, lons)
-            cells = np.unique(
-                hexgrid.latlng_to_cell(glat.ravel(), glon.ravel(), res)
-            )
-            for c in cells:
-                self.buckets.setdefault(int(c), []).append(i)
-
-    def query(self, lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
-        """Vectorized PIP: returns poly index per point (-1 = none).
-        Points are grouped by coarse cell; each group tests only its
-        bucket's polygons with vectorized ray casting."""
-        out = np.full(len(lat), -1, dtype=np.int64)
-        cells = hexgrid.latlng_to_cell(lat, lon, self.res)
-        order = np.argsort(cells, kind="stable")
-        sorted_cells = cells[order]
-        bounds = np.searchsorted(sorted_cells, np.unique(sorted_cells))
-        uniq = np.unique(sorted_cells)
-        for u, start in zip(uniq, bounds):
-            end = np.searchsorted(sorted_cells, u, side="right")
-            idx = order[start:end]
-            for pi in self.buckets.get(int(u), []):
-                hit = _ray_cast_rings(lat[idx], lon[idx], _rings(self.polys[pi]))
-                # first polygon wins only where not already assigned
-                assignable = hit & (out[idx] == -1)
-                out[idx[assignable]] = pi
-        return out
-
 
 def _rings(p: dict) -> list[np.ndarray]:
     """Outer ring + any hole rings of a polygon record."""
@@ -146,39 +107,30 @@ def _ray_cast(lat: np.ndarray, lon: np.ndarray, verts: np.ndarray) -> np.ndarray
     return inside
 
 
-def pip_join(
-    spark: SparkSession,
-    points: DataFrame | None = None,
-    polys: list[dict] | None = None,
-) -> DataFrame:
-    """mapInPandas PIP join: points → (point cols, poly_id, zone, metro).
+def _dbl(v: float) -> str:
+    """A DOUBLE literal: a bare ``-87.7`` parses as DECIMAL in Spark SQL."""
+    return f"{float(v)!r}D"
 
-    The index is closed over by the kernel (task-broadcast via pickled
-    closure — dim-scale by construction); batches stay in Arrow.
-    """
-    pts = points if points is not None else spark.table("sites").select("site_id", "lat", "lon")
-    if polys is None:
-        polys = synthetic_polygons()
-    index = PolygonIndex(polys)
-    meta = [(p["poly_id"], p["metro"], p["zone"]) for p in polys]
-    base_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in pts.schema.fields)
-    out_schema = base_schema + ", poly_id bigint, poly_metro string, poly_zone string"
 
-    def kernel(batches):
-        for pdf in batches:
-            hit = index.query(pdf["lat"].values.astype(np.float64),
-                              pdf["lon"].values.astype(np.float64))
-            pdf = pdf.copy()
-            pdf["poly_id"] = [meta[h][0] if h >= 0 else -1 for h in hit]
-            pdf["poly_metro"] = [meta[h][1] if h >= 0 else None for h in hit]
-            pdf["poly_zone"] = [meta[h][2] if h >= 0 else None for h in hit]
-            yield pdf
-
-    return pts.mapInPandas(kernel, schema=out_schema)
+def _ray_cast_sql(rings: list[np.ndarray], lat: str, lon: str) -> str:
+    """``_ray_cast_rings`` as one SQL predicate, bit for bit: one crossing
+    term per ring edge in the kernel's operation order (same ``+ 1e-300``
+    denominator), inside when the crossing count is odd."""
+    terms = []
+    for ring in rings:
+        n = len(ring)
+        for i in range(n):
+            y1, x1 = map(_dbl, ring[i])
+            y2, x2 = map(_dbl, ring[(i + 1) % n])
+            terms.append(
+                f"IF((({y1} > {lat}) != ({y2} > {lat})) AND {lon} < "
+                f"({x2} - {x1}) * ({lat} - {y1}) / ({y2} - {y1} + 1e-300D) + {x1}, 1, 0)"
+            )
+    return f"(({' + '.join(terms)}) % 2 = 1)"
 
 
 # ---------------------------------------------------------------------------
-# Oracle-checkable twin: convex half-plane PIP in portable SQL
+# Oracle twin: convex half-plane PIP in portable SQL
 # ---------------------------------------------------------------------------
 
 def _halfplane_conds(verts: list[tuple[float, float]], lat: str, lon: str) -> str:
@@ -198,8 +150,8 @@ def _halfplane_conds(verts: list[tuple[float, float]], lat: str, lon: str) -> st
 
 def pip_zone_case_sql(lat: str, lon: str) -> tuple[str, str]:
     """(poly_id_expr, zone_expr): first-match CASE over core-then-area
-    polygons — identical semantics to the bucketed index's first-hit rule
-    because cores are listed before areas per metro."""
+    polygons — the oracle twin of ``pip_join``'s first-hit rule, which
+    tries candidates in the same core-then-area priority order."""
     polys = synthetic_polygons()
     ordered = sorted(polys, key=lambda p: (p["zone"] != "core", p["poly_id"]))
     id_whens, zone_whens = [], []
@@ -214,17 +166,11 @@ def pip_zone_case_sql(lat: str, lon: str) -> tuple[str, str]:
 
 
 def pip_convex_join(spark: SparkSession) -> DataFrame:
-    """Sites × boundary zones via half-plane tests + per-zone rollup."""
-    pid, zone = pip_zone_case_sql("lat", "lon")
-    sites = spark.table("sites")
+    """Sites × boundary zones: ``pip_join`` rolled up per (site metro, zone)."""
+    sites = spark.table("sites").select("site_id", "metro", "lat", "lon", "h3_res8")
     return (
-        sites.select(
-            "site_id",
-            "metro",
-            F.expr(pid).cast("long").alias("poly_id"),
-            F.expr(zone).alias("zone"),
-        )
-        .groupBy("metro", "zone")
+        pip_join(spark, points=sites)
+        .groupBy("metro", F.col("poly_zone").alias("zone"))
         .agg(F.count(F.lit(1)).alias("n_sites"), F.min("site_id").alias("first_site"))
     )
 
@@ -239,9 +185,9 @@ GROUP BY 1, 2"""
 
 
 def pip_assignments_oracle_sql() -> str:
-    """Oracle for the bucketed-index mapInPandas path: polygons are convex
-    and disjoint-per-priority (core before area), so first-hit bucket
-    assignment == the ordered half-plane CASE."""
+    """Oracle for every ``pip_join`` placement: the synthetic polygons are
+    convex and disjoint-per-priority (core before area), so the first-hit
+    ray cast == the ordered half-plane CASE."""
     pid, zone = pip_zone_case_sql("lat", "lon")
     return f"""
 SELECT site_id, CAST({pid} AS BIGINT) AS poly_id, {zone} AS poly_zone
@@ -249,18 +195,14 @@ FROM ({hex_sql.sites_sql()}) __sites"""
 
 
 # ---------------------------------------------------------------------------
-# Polygon -> cell cover (polyfill) and the shuffle-free JVM cover join
+# Polygon -> cell cover (polyfill)
 # ---------------------------------------------------------------------------
 #
-# The 100-TB path for PIP: pre-compute each polygon's hex-cell cover once
-# (driver-side numpy over a dim-scale polygon layer), classify every cover
-# cell as INTERIOR (hex fully inside the polygon -- membership decided by
-# the cell equi-join alone, no per-point geometry) or BOUNDARY (hex
-# intersects the polygon edge -- refine with the exact half-plane test).
-# Points then join the broadcast cover on their existing cell id; only the
-# thin boundary ring pays per-point math, and even that stays JVM-side as
-# codegen'd column arithmetic.  No mapInPandas, no shuffle, no Python in
-# the hot path -- the plan is Scan -> BroadcastHashJoin -> Project.
+# Each polygon's hex-cell cover is computed once, in numpy, and every cover
+# cell is classified INTERIOR (hex fully inside the polygon -- membership
+# decided by the cell equi-join alone, no per-point geometry) or BOUNDARY
+# (hex meets a ring edge -- refine with the exact ray cast).  Only the thin
+# boundary ring pays per-point math.
 
 _HEX_CORNER_ANGLES = [math.radians(30 + 60 * k) for k in range(6)]
 
@@ -274,90 +216,12 @@ def _ccw(verts: np.ndarray) -> np.ndarray:
 
 def _cell_corners(q: np.ndarray, r: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
     """(n, 6) corner lat / lon arrays for pointy-top hexes of the lattice."""
-    from ..config import HEX_SIZE_DEG
-
     s = HEX_SIZE_DEG[res]
     clat = r * 1.5 * s
     clon = (q + r / 2.0) * hexgrid.SQRT3 * s
     sin = np.array([math.sin(a) for a in _HEX_CORNER_ANGLES])
     cos = np.array([math.cos(a) for a in _HEX_CORNER_ANGLES])
     return clat[:, None] + s * sin[None, :], clon[:, None] + s * cos[None, :]
-
-
-def polygon_cell_cover(polys: list[dict] | None = None, res: int | None = None) -> list[dict]:
-    """Polyfill: every res-cell whose hex intersects each (convex) polygon.
-
-    Rows: {cell, poly_id, metro, zone, priority, interior}.  ``interior``
-    means the whole hex is inside the polygon (all 6 corners pass every
-    half-plane -- sufficient because both shapes are convex); other
-    intersecting cells (separating-axis test finds no gap) are boundary.
-
-    Completeness: any point p inside P lies in a cell whose center is
-    within one circumradius of p, hence inside bbox(P) expanded by one
-    cell -- exactly the lattice rectangle enumerated here.  The reference
-    has no polyfill (it substitutes hex membership for PIP); this is the
-    H3 `polygon_to_cells` analogue over our from-scratch lattice.
-    """
-    from ..config import HEX_SIZE_DEG, RES_TRADE_AREA
-
-    if polys is None:
-        polys = synthetic_polygons()
-    res = RES_TRADE_AREA if res is None else res
-    s = HEX_SIZE_DEG[res]
-    ordered = sorted(polys, key=lambda p: (p["zone"] != "core", p["poly_id"]))
-    rows: list[dict] = []
-    for prio, p in enumerate(ordered):
-        vs = _ccw(np.asarray(p["verts"], dtype=np.float64))
-        lat_lo, lon_lo = vs.min(axis=0)
-        lat_hi, lon_hi = vs.max(axis=0)
-        # exact lattice rectangle over bbox expanded by one circumradius
-        r_lo = math.floor((lat_lo - s) / (1.5 * s)) - 1
-        r_hi = math.ceil((lat_hi + s) / (1.5 * s)) + 1
-        # q = lon/(sqrt3*s) - r/2 ; widen by the full r-range so the
-        # rectangle in (q, r) covers the sheared bbox
-        q_lo = math.floor((lon_lo - s) / (hexgrid.SQRT3 * s) - r_hi / 2.0) - 1
-        q_hi = math.ceil((lon_hi + s) / (hexgrid.SQRT3 * s) - r_lo / 2.0) + 1
-        qq, rr = np.meshgrid(np.arange(q_lo, q_hi + 1), np.arange(r_lo, r_hi + 1))
-        q, r = qq.ravel().astype(np.int64), rr.ravel().astype(np.int64)
-        clat, clon = _cell_corners(q, r, res)  # (n, 6)
-
-        # interior: every corner left of every CCW edge
-        inside_all = np.ones(len(q), dtype=bool)
-        for i in range(len(vs)):
-            y1, x1 = vs[i]
-            y2, x2 = vs[(i + 1) % len(vs)]
-            cross = (x2 - x1) * (clat - y1) - (y2 - y1) * (clon - x1)
-            inside_all &= (cross >= 0).all(axis=1)
-
-        # intersecting: separating-axis test over poly edge normals +
-        # the hex's 3 edge-normal axes (pointy-top: 30/90/150 degrees)
-        separated = np.zeros(len(q), dtype=bool)
-        axes = []
-        for i in range(len(vs)):
-            y1, x1 = vs[i]
-            y2, x2 = vs[(i + 1) % len(vs)]
-            axes.append((-(y2 - y1), x2 - x1))  # normal of edge (dx, dy)
-        for a in (30, 90, 150):
-            axes.append((math.cos(math.radians(a)), math.sin(math.radians(a))))
-        for ax, ay in axes:
-            ph = clon * ax + clat * ay  # (n, 6) hex projections
-            pp = vs[:, 1] * ax + vs[:, 0] * ay  # (m,) poly projections
-            separated |= (ph.max(axis=1) < pp.min()) | (ph.min(axis=1) > pp.max())
-        hit = ~separated
-        for cell, is_int in zip(
-            hexgrid.qr_to_cell(q[hit], r[hit], res), inside_all[hit]
-        ):
-            rows.append(
-                {
-                    "cell": int(cell),
-                    "poly_id": p["poly_id"],
-                    "metro": p["metro"],
-                    "zone": p["zone"],
-                    "priority": prio,
-                    "interior": bool(is_int),
-                }
-            )
-    return rows
 
 
 def _convex_hull(verts: np.ndarray) -> np.ndarray:
@@ -401,8 +265,12 @@ def _segments_cross(
     return (o1 * o2 <= 0) & (o3 * o4 <= 0)
 
 
-def polygon_cell_cover_general(polys: list[dict], res: int | None = None) -> list[dict]:
-    """Polyfill for ARBITRARY simple polygons (non-convex allowed).
+def polygon_cell_cover(polys: list[dict] | None = None) -> list[dict]:
+    """Polyfill: every res-8 cell whose hex may meet each polygon.
+
+    Rows: {cell, poly_id, metro, zone, priority, interior}; polygons are
+    any simple rings, convex or not, with optional holes.  ``None`` means
+    the synthetic boundary layer.
 
     Interior = all 6 hex corners inside (even-odd ray cast over outer +
     hole rings) AND no ring edge crosses any hex edge AND no hole sits
@@ -411,13 +279,18 @@ def polygon_cell_cover_general(polys: list[dict], res: int | None = None) -> lis
     against the OUTER ring's convex hull (sound: hex∩P ⊆ hex∩hull);
     surviving non-interior cells are boundary — a conservative superset
     (cells in a concavity notch or inside a hole route to the exact
-    kernel and resolve to no-hit there), which costs refine work, never
+    ray cast and resolve to no-hit there), which costs refine work, never
     correctness.  Polygons may carry ``holes``: a list of interior rings
     (census tracts with excluded enclaves, water bodies, ...).
-    """
-    from ..config import HEX_SIZE_DEG, RES_TRADE_AREA
 
-    res = RES_TRADE_AREA if res is None else res
+    Completeness: any point p inside P lies in a cell whose center is
+    within one circumradius of p, hence inside bbox(P) expanded by one
+    cell -- exactly the lattice rectangle enumerated here.  This is the
+    H3 ``polygon_to_cells`` analogue over the from-scratch lattice.
+    """
+    if polys is None:
+        polys = synthetic_polygons()
+    res = RES_TRADE_AREA
     s = HEX_SIZE_DEG[res]
     ordered = sorted(polys, key=lambda p: (p.get("zone") != "core", p["poly_id"]))
     rows: list[dict] = []
@@ -438,7 +311,7 @@ def polygon_cell_cover_general(polys: list[dict], res: int | None = None) -> lis
         q, r = qq.ravel().astype(np.int64), rr.ravel().astype(np.int64)
         clat, clon = _cell_corners(q, r, res)  # (n, 6)
 
-        # prune with hull SAT (same axes as the convex path)
+        # prune with SAT: the hull's edge normals + the hex's 3 axes
         separated = np.zeros(len(q), dtype=bool)
         axes = []
         for i in range(len(hull)):
@@ -492,62 +365,9 @@ def polygon_cell_cover_general(polys: list[dict], res: int | None = None) -> lis
     return rows
 
 
-def pip_join_hybrid(
-    spark: SparkSession,
-    points: DataFrame | None = None,
-    polys: list[dict] | None = None,
-    res: int | None = None,
-    cell_col: str = "h3_res8",
-) -> DataFrame:
-    """General-polygon PIP at scale: JVM for the interior, kernel for the rim.
-
-    Points whose cell's FIRST candidate (priority order) is an interior
-    cell are assigned by the broadcast join alone — no geometry, no
-    Python.  Only points in boundary cells (or cells where a boundary
-    candidate outranks the interior one) route through the exact ray-cast
-    kernel; no-cover points are no-hit by construction.  At the synthetic
-    layer's density that rim is ~10% of covered cells, so >90% of the
-    corpus never leaves whole-stage codegen while supporting arbitrary
-    simple polygons (unlike ``pip_cover_join``'s convex-only refinement).
-    """
-    pts = (
-        points
-        if points is not None
-        else spark.table("sites").select("site_id", "lat", "lon", "h3_res8")
-    )
-    if polys is None:
-        polys = synthetic_polygons()
-    ordered = sorted(polys, key=lambda p: (p.get("zone") != "core", p["poly_id"]))
-    rows = polygon_cell_cover_general(polys, res=res)
-    cover = _pack_cover(spark, rows)
-    joined = pts.join(F.broadcast(cover), pts[cell_col] == cover["cell"], "left").select(
-        *pts.columns, F.col("cands")
-    )
-    decided = F.expr("cands IS NULL OR get(cands, 0).interior")
-    fast = joined.filter(decided).select(
-        "site_id",
-        F.coalesce(F.expr("get(cands, 0).poly_id"), F.lit(-1).cast("long")).alias(
-            "poly_id"
-        ),
-        F.expr("get(cands, 0).zone").alias("poly_zone"),
-    )
-    # exact kernel only for the boundary rim, with the SAME priority rule
-    # (PolygonIndex first-hit follows list order = priority order here)
-    rim = joined.filter(~decided).drop("cands")
-    slow = pip_join(spark, points=rim, polys=ordered).select(
-        "site_id", "poly_id", "poly_zone"
-    )
-    return fast.unionByName(slow)
-
-
-def _refine_case_sql(lat: str, lon: str, poly_key: str) -> str:
-    """CASE <poly_key> WHEN id THEN <half-plane test> ... -- the exact
-    membership test applied only to boundary-cell candidates."""
-    whens = []
-    for p in synthetic_polygons():
-        whens.append(f"WHEN {p['poly_id']} THEN {_halfplane_conds(p['verts'], lat, lon)}")
-    return f"CASE {poly_key} {' '.join(whens)} ELSE false END"
-
+# ---------------------------------------------------------------------------
+# The join
+# ---------------------------------------------------------------------------
 
 def _pack_cover(spark: SparkSession, rows: list[dict]) -> DataFrame:
     """One row per cover cell, candidates pre-sorted by priority in an
@@ -574,57 +394,53 @@ def _pack_cover(spark: SparkSession, rows: list[dict]) -> DataFrame:
     )
 
 
-def cover_by_cell(spark: SparkSession, res: int | None = None) -> DataFrame:
-    """The broadcast side of the convex-layer cover join."""
-    return _pack_cover(spark, polygon_cell_cover(res=res))
-
-
-def _resolve_cover_hit(
-    spark: SparkSession,
-    pts: DataFrame,
-    keys: list[str],
-    res: int | None = None,
-    cell_col: str = "h3_res8",
-) -> DataFrame:
-    """keys + the first accepted cover candidate (null struct = no hit)."""
-    cover = cover_by_cell(spark, res=res)
-    refine = _refine_case_sql("lat", "lon", "x.poly_id")
-    hit = f"filter(cands, x -> x.interior OR {refine})"
-    joined = pts.join(F.broadcast(cover), pts[cell_col] == cover["cell"], "left")
-    return joined.select(*keys, F.expr(f"get({hit}, 0)").alias("__hit"))
-
-
-def pip_cover_join(
+def pip_join(
     spark: SparkSession,
     points: DataFrame | None = None,
-    res: int | None = None,
-    cell_col: str = "h3_res8",
+    polys: list[dict] | DataFrame | None = None,
 ) -> DataFrame:
-    """Shuffle-free PIP: points x polygons via the broadcast cell cover.
+    """Points → the first polygon (priority order) containing each point.
 
-    Plan: Scan -> BroadcastHashJoin(cell) -> Project.  Interior-cell hits
-    skip geometry entirely; boundary-cell candidates run the exact
-    half-plane test inside an array lambda (whole-stage codegen, no Python,
-    no Exchange).  First passing candidate in priority order wins --
-    identical semantics to ``pip_zone_case_sql``'s ordered CASE, so the
-    same oracle checks both plans.
+    ``points`` needs ``lat``, ``lon`` and its res-8 cell ``h3_res8``
+    (default: the sites).  ``polys`` is a list of polygon records
+    (default: the synthetic layer), polyfilled on the driver and
+    broadcast: the result is the point columns plus ``poly_id`` (bigint,
+    -1 for no hit), ``poly_metro`` and ``poly_zone``; boundary candidates
+    run ``_ray_cast_sql`` inside an array lambda, so the plan is Scan →
+    BroadcastHashJoin → Project with no Python.  A ``DataFrame`` in the
+    ``polygons_df`` layout is a layer too big to broadcast: distributed
+    polyfill, shuffle hash cover join, Arrow ray cast over the boundary
+    candidates only, and one ``min(struct)`` per ``site_id``; the result
+    is ``site_id, poly_id, poly_metro, poly_zone``.
     """
     pts = (
         points
         if points is not None
         else spark.table("sites").select("site_id", "lat", "lon", "h3_res8")
     )
-    resolved = _resolve_cover_hit(spark, pts, ["site_id"], res=res, cell_col=cell_col)
-    return resolved.select(
-        "site_id",
+    if isinstance(polys, DataFrame):
+        return _pip_join_shuffled(spark, pts, polys)
+    if polys is None:
+        polys = synthetic_polygons()
+    cover = _pack_cover(spark, polygon_cell_cover(polys))
+    refine = " ".join(
+        f"WHEN {p['poly_id']} THEN {_ray_cast_sql(_rings(p), 'lat', 'lon')}" for p in polys
+    )
+    hit = F.expr(
+        f"get(filter(cands, x -> x.interior OR CASE x.poly_id {refine} ELSE false END), 0)"
+    )
+    joined = pts.join(F.broadcast(cover), pts["h3_res8"] == cover["cell"], "left")
+    return joined.select(*pts.columns, hit.alias("__hit")).select(
+        *pts.columns,
         F.coalesce(F.col("__hit.poly_id"), F.lit(-1).cast("long")).alias("poly_id"),
+        F.col("__hit.metro").alias("poly_metro"),
         F.col("__hit.zone").alias("poly_zone"),
     )
 
 
 def doc_zone_counts(spark: SparkSession) -> DataFrame:
     """Corpus x boundary layer: geotagged document spans assigned to trade
-    zones via the broadcast cell cover, rolled up per (metro, zone).
+    zones by ``pip_join``, rolled up per (metro, zone).
 
     The interleaved-docs side of the north star meets the PIP side: span
     extraction already attaches the res-8 hex_id, so zone assignment is
@@ -635,15 +451,10 @@ def doc_zone_counts(spark: SparkSession) -> DataFrame:
 
     g = geotagged_spans(spark)
     pts = g.select("doc_id", "lat", "lon", F.col("hex_id").alias("h3_res8"))
-    resolved = _resolve_cover_hit(spark, pts, ["doc_id"])
     return (
-        resolved.filter(F.col("__hit").isNotNull())
-        .select(
-            "doc_id",
-            F.col("__hit.metro").alias("metro"),
-            F.col("__hit.zone").alias("zone"),
-        )
-        .groupBy("metro", "zone")
+        pip_join(spark, points=pts)
+        .filter(F.col("poly_id") >= 0)
+        .groupBy(F.col("poly_metro").alias("metro"), F.col("poly_zone").alias("zone"))
         .agg(
             F.countDistinct("doc_id").alias("n_docs"),
             F.count(F.lit(1)).alias("n_spans"),
@@ -655,15 +466,15 @@ def doc_zone_counts(spark: SparkSession) -> DataFrame:
 # Census-scale layers: distributed polyfill + shuffle cover join
 # ---------------------------------------------------------------------------
 #
-# The broadcast cover join above assumes a dim-scale polygon layer (the
-# cover fits one executor and the refine CASE fits one expression).  A
-# census-scale layer (10^5+ polygons, cover in the 10^8-cell range) fits
-# neither: the polyfill itself must run distributed over polygon
-# partitions, the cover join becomes a shuffle hash join on cell, and the
-# boundary-ring refinement runs as an Arrow kernel over ONLY the boundary
-# candidates (cover rows carry their ring geometry, so no second join).
-# Priority resolution is one hash agg — min(struct) per point — so the
-# whole plan is two shuffles and zero driver-side geometry.
+# A broadcast cover assumes a dim-scale polygon layer (the cover fits one
+# executor and the refine CASE fits one expression).  A census-scale layer
+# (10^5+ polygons, cover in the 10^8-cell range) fits neither: the polyfill
+# runs distributed over polygon partitions, the cover join is a shuffle
+# hash join on cell, and the boundary-ring ray cast runs as an Arrow kernel
+# over ONLY the boundary candidates (cover rows carry their ring geometry,
+# so no second join).  Priority resolution is one hash agg — min(struct)
+# per point — so the whole plan is two shuffles and zero driver-side
+# geometry.
 
 # geometry rides as a JSON string of rings (outer first, then holes):
 # deeply-nested list columns (array<array<array<double>>>) segfault this
@@ -702,9 +513,7 @@ def polygons_df(spark: SparkSession, polys: list[dict] | None = None) -> DataFra
     )
 
 
-def polyfill_distributed(
-    spark: SparkSession, polys: DataFrame | None = None, res: int | None = None
-) -> DataFrame:
+def polyfill_distributed(spark: SparkSession, polys: DataFrame | None = None) -> DataFrame:
     """Distributed polyfill: one Arrow batch of polygons in, cover cells
     out.  Scales with |polygons| across executors — no driver geometry,
     no broadcast.  Boundary rows carry their ring geometry so the
@@ -732,7 +541,7 @@ def polyfill_distributed(
                         "holes": [[tuple(v) for v in h] for h in rings[1:]],
                     }
                 )
-            cov = polygon_cell_cover_general(recs, res=res)
+            cov = polygon_cell_cover(recs)
             out = pd.DataFrame.from_records(cov) if cov else pd.DataFrame(
                 columns=["cell", "poly_id", "metro", "zone", "priority", "interior"]
             )
@@ -748,43 +557,30 @@ def polyfill_distributed(
     return pdf_in.mapInPandas(kernel, schema=_COVER_GEOM_SCHEMA)
 
 
-def pip_cover_join_distributed(
-    spark: SparkSession,
-    points: DataFrame | None = None,
-    polys: DataFrame | None = None,
-    res: int | None = None,
-    cell_col: str = "h3_res8",
-    key: str = "site_id",
-) -> DataFrame:
-    """PIP for layers too big to broadcast: shuffle cover join + Arrow
-    refine on boundary candidates only + one min(struct) resolution agg.
-
-    Plan shape: points ⇄ cover SHUFFLE_HASH join on cell (AQE handles the
-    urban-core cell skew), a mapInPandas ray-cast over ONLY the boundary
-    candidate rows (~10% of cover), then a hash agg on the point key.
-    Interior candidates and cover misses never touch Python.
-    """
-    pts = (
-        points
-        if points is not None
-        else spark.table("sites").select("site_id", "lat", "lon", "h3_res8")
-    )
-    cover = polyfill_distributed(spark, polys=polys, res=res)
+def _pip_join_shuffled(spark: SparkSession, pts: DataFrame, polys: DataFrame) -> DataFrame:
+    """``pip_join``'s shuffle branch: points ⇄ cover SHUFFLE_HASH join on
+    cell (AQE handles the urban-core cell skew), a mapInPandas ray cast
+    over ONLY the boundary candidate rows (~10% of cover), then a hash agg
+    on ``site_id``.  Interior candidates and cover misses never touch
+    Python."""
+    cover = polyfill_distributed(spark, polys)
     cand = pts.join(
-        cover.hint("shuffle_hash"), pts[cell_col] == cover["cell"], "left"
+        cover.hint("shuffle_hash"), pts["h3_res8"] == cover["cell"], "left"
     ).select(
-        key, "lat", "lon", "poly_id", "zone", "priority", "interior", "rings_json"
+        "site_id", "lat", "lon", "poly_id", "zone", "metro", "priority", "interior",
+        "rings_json",
     )
 
     easy = cand.filter(F.col("interior").isNull() | F.col("interior")).select(
-        key, "poly_id", "zone", "priority",
+        "site_id", "poly_id", "zone", "metro", "priority",
         F.coalesce(F.col("interior"), F.lit(False)).alias("accepted"),
     )
 
     hard_in = cand.filter(~F.col("interior"))
-    key_type = dict((f.name, f.dataType.simpleString()) for f in pts.schema.fields)[key]
+    key_type = pts.schema["site_id"].dataType.simpleString()
     refine_schema = (
-        f"{key} {key_type}, poly_id bigint, zone string, priority int, accepted boolean"
+        f"site_id {key_type}, poly_id bigint, zone string, metro string, "
+        "priority int, accepted boolean"
     )
 
     def refine(batches):
@@ -801,7 +597,7 @@ def pip_cover_join_distributed(
                     grp["lon"].values.astype(np.float64),
                     rings,
                 )
-                out = grp[[key, "poly_id", "zone", "priority"]].copy()
+                out = grp[["site_id", "poly_id", "zone", "metro", "priority"]].copy()
                 out["accepted"] = acc
                 yield out
 
@@ -809,21 +605,22 @@ def pip_cover_join_distributed(
 
     resolved = (
         easy.unionByName(hard)
-        .groupBy(key)
+        .groupBy("site_id")
         .agg(
             F.min(
                 F.when(
                     F.col("accepted"),
                     F.struct(
-                        F.col("priority"), F.col("poly_id"), F.col("zone")
+                        F.col("priority"), F.col("poly_id"), F.col("zone"), F.col("metro")
                     ),
                 )
             ).alias("__hit")
         )
     )
     return resolved.select(
-        key,
+        "site_id",
         F.coalesce(F.col("__hit.poly_id"), F.lit(-1).cast("long")).alias("poly_id"),
+        F.col("__hit.metro").alias("poly_metro"),
         F.col("__hit.zone").alias("poly_zone"),
     )
 

@@ -490,12 +490,12 @@ def corridor_demand_oracle_sql() -> str:
 
 
 def _cover_values_sql() -> str:
-    """The convex-layer polyfill cover (operators/pip.polygon_cell_cover)
+    """The synthetic layer's polyfill cover (operators/pip.polygon_cell_cover)
     as a VALUES literal — pure deterministic Python, inlined identically
     into both engines (the pip oracles inline the polygons the same way)."""
     from .pip import polygon_cell_cover
 
-    cells = sorted({r["cell"] for r in polygon_cell_cover(res=8)})
+    cells = sorted({r["cell"] for r in polygon_cell_cover()})
     rows = ", ".join(f"({c})" for c in cells)
     return f"(SELECT * FROM (VALUES {rows}) AS __cv(cell_id))"
 

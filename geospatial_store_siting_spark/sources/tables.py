@@ -158,15 +158,3 @@ def _drop_stage_views(spark: SparkSession) -> None:
         spark.catalog.dropTempView(name)
     setattr(spark, _STAGE_NAMES_ATTR, set())
     setattr(spark, _STAGE_SF_ATTR, None)
-
-
-def oracle_cte(name: str) -> str:
-    """The DuckDB-side CTE body for a derived view, e.g. ``sites``."""
-    return all_views()[name]()
-
-
-def oracle_with_clause(names: list[str]) -> str:
-    """``WITH sites AS (...), ...`` prefix for oracle SQL strings."""
-    views = all_views()
-    parts = ", ".join(f"{n} AS ({views[n]()})" for n in names)
-    return f"WITH {parts}"

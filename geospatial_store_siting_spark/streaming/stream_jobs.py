@@ -329,22 +329,17 @@ def doc_zones_stream(spark, docs: DataFrame) -> DataFrame:
 
     The cover join is a stream-static broadcast equi-join — stateless on
     the stream side, so the only streaming state is the final rollup's
-    aggregation.  Same first-match/half-plane semantics as the batch
-    operator (one shared `_resolve_cover_hit`)."""
-    from ..operators.pip import _resolve_cover_hit
+    aggregation.  Same first-match semantics as the batch operator (both
+    are rollups over `pip_join`)."""
+    from ..operators.pip import pip_join
 
     pts = _geo_span_stream(docs).select(
         "doc_id", "lat", "lon", F.col("hex_id").alias("h3_res8")
     )
-    resolved = _resolve_cover_hit(spark, pts, ["doc_id"])
     return (
-        resolved.filter(F.col("__hit").isNotNull())
-        .select(
-            "doc_id",
-            F.col("__hit.metro").alias("metro"),
-            F.col("__hit.zone").alias("zone"),
-        )
-        .groupBy("metro", "zone")
+        pip_join(spark, points=pts)
+        .filter(F.col("poly_id") >= 0)
+        .groupBy(F.col("poly_metro").alias("metro"), F.col("poly_zone").alias("zone"))
         .agg(
             F.approx_count_distinct("doc_id").alias("approx_docs"),
             F.count(F.lit(1)).alias("n_spans"),

@@ -146,7 +146,7 @@ def test_compact_cover_roundtrip(geo):
     from geospatial_store_siting_spark.operators import rings
     from geospatial_store_siting_spark.operators.pip import polygon_cell_cover
 
-    cover = {r["cell"] for r in polygon_cell_cover(res=8)}
+    cover = {r["cell"] for r in polygon_cell_cover()}
     out = rings.compact_cover(geo).collect()
     parents7 = [r.cell_out for r in out if r.res == 7]
     cells8 = {r.cell_out for r in out if r.res == 8}

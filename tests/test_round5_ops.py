@@ -1276,12 +1276,29 @@ class TestPolygonCellCover:
             cells = hexgrid.latlng_to_cell(pts[:, 0], pts[:, 1], 8)
             assert all(p["poly_id"] in cover.get(int(cl), set()) for cl in cells)
 
+    def test_cover_rows_are_pinned(self):
+        """The synthetic layer's cover, row for row: the general polyfill
+        reproduces what the convex-only builder emitted (sha256 of the
+        sorted (cell, poly_id, priority, interior) rows, from that builder)."""
+        import hashlib
+
+        from geospatial_store_siting_spark.operators import pip
+
+        rows = sorted(
+            (r["cell"], r["poly_id"], r["priority"], r["interior"])
+            for r in pip.polygon_cell_cover()
+        )
+        assert len(rows) == 12083
+        assert hashlib.sha256(repr(rows).encode()).hexdigest() == (
+            "374e089af1903660d8c123ac776c3d8059212d274fbd4a6c214ce3ab5350e9cc"
+        )
+
     def test_cover_join_matches_halfplane_case(self, geo):
         """End-to-end equivalence on real sites: broadcast-cover plan ==
         the ordered half-plane CASE (same rule the DuckDB oracle runs)."""
         from geospatial_store_siting_spark.operators import pip
 
-        got = pip.pip_cover_join(geo)
+        got = pip.pip_join(geo).select("site_id", "poly_id", "poly_zone")
         pid, zone = pip.pip_zone_case_sql("lat", "lon")
         want = geo.table("sites").select(
             "site_id",
@@ -1296,14 +1313,15 @@ class TestPolygonCellCover:
         shuffle exchange, no Python/Arrow eval anywhere in the plan."""
         from geospatial_store_siting_spark.operators import pip
 
-        plan = pip.pip_cover_join(geo)._jdf.queryExecution().executedPlan().toString()
+        plan = pip.pip_join(geo)._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan
         assert "ShuffleExchange" not in plan and "hashpartitioning" not in plan
         assert "Python" not in plan and "ArrowEval" not in plan
 
 
 class TestHybridPIP:
-    """General-polygon polyfill + interior-JVM/boundary-kernel hybrid."""
+    """General-polygon polyfill + the broadcast pip_join over it (interior
+    cells decided by the cell join, boundary cells by the SQL ray cast)."""
 
     L_SHAPE = {
         "poly_id": 7, "metro": None, "zone": None,
@@ -1320,7 +1338,7 @@ class TestHybridPIP:
         from geospatial_store_siting_spark.functions import hexgrid
         from geospatial_store_siting_spark.operators import pip
 
-        rows = pip.polygon_cell_cover_general([self.L_SHAPE])
+        rows = pip.polygon_cell_cover([self.L_SHAPE])
         ints = [r for r in rows if r["interior"]]
         assert len(ints) > 100
         vs = np.asarray(self.L_SHAPE["verts"])
@@ -1339,7 +1357,7 @@ class TestHybridPIP:
         from geospatial_store_siting_spark.functions import hexgrid
         from geospatial_store_siting_spark.operators import pip
 
-        cov = {r["cell"] for r in pip.polygon_cell_cover_general([self.L_SHAPE])}
+        cov = {r["cell"] for r in pip.polygon_cell_cover([self.L_SHAPE])}
         vs = np.asarray(self.L_SHAPE["verts"])
         rng = np.random.default_rng(6)
         lat = rng.uniform(41.801, 41.959, 3000)
@@ -1363,7 +1381,7 @@ class TestHybridPIP:
             "site_id": np.arange(2000), "lat": lat, "lon": lon,
             "h3_res8": hexgrid.latlng_to_cell(lat, lon, 8)}))
         got = (
-            pip.pip_join_hybrid(spark, points=pts, polys=[self.L_SHAPE])
+            pip.pip_join(spark, points=pts, polys=[self.L_SHAPE])
             .toPandas().set_index("site_id").sort_index()
         )
         want = np.where(pip._ray_cast(lat, lon, vs), 7, -1)
@@ -1372,7 +1390,7 @@ class TestHybridPIP:
     def test_hybrid_matches_case_on_synthetic_layer(self, geo):
         from geospatial_store_siting_spark.operators import pip
 
-        got = pip.pip_join_hybrid(geo)
+        got = pip.pip_join(geo).select("site_id", "poly_id", "poly_zone")
         pid, zone = pip.pip_zone_case_sql("lat", "lon")
         want = geo.table("sites").select(
             "site_id",
@@ -1384,10 +1402,10 @@ class TestHybridPIP:
 
     def test_boundary_rim_is_small_fraction(self):
         """The scale contract: only ~10% of cover cells (the rim) pay the
-        Python kernel; >=85% of the synthetic layer's cover is interior."""
+        exact ray cast; >=85% of the synthetic layer's cover is interior."""
         from geospatial_store_siting_spark.operators import pip
 
-        rows = pip.polygon_cell_cover_general(pip.synthetic_polygons())
+        rows = pip.polygon_cell_cover(pip.synthetic_polygons())
         frac = sum(1 for r in rows if not r["interior"]) / len(rows)
         assert frac < 0.15
 
@@ -1409,7 +1427,7 @@ class TestPIPHoles:
         from geospatial_store_siting_spark.functions import hexgrid
         from geospatial_store_siting_spark.operators import pip
 
-        rows = pip.polygon_cell_cover_general([self.DONUT])
+        rows = pip.polygon_cell_cover([self.DONUT])
         rings = pip._rings(self.DONUT)
         ints = [r for r in rows if r["interior"]]
         assert len(ints) > 100
@@ -1437,7 +1455,7 @@ class TestPIPHoles:
         tiny = dict(self.DONUT, poly_id=4, holes=[[
             (41.8801, -87.6201), (41.8801, -87.6199),
             (41.8799, -87.6199), (41.8799, -87.6201)]])
-        rows = pip.polygon_cell_cover_general([tiny])
+        rows = pip.polygon_cell_cover([tiny])
         hole_cell = int(
             hexgrid.latlng_to_cell(np.array([41.88]), np.array([-87.62]), 8)[0]
         )
@@ -1459,11 +1477,40 @@ class TestPIPHoles:
             "site_id": np.arange(2000), "lat": lat, "lon": lon,
             "h3_res8": hexgrid.latlng_to_cell(lat, lon, 8)}))
         got = (
-            pip.pip_join_hybrid(spark, points=pts, polys=[self.DONUT])
+            pip.pip_join(spark, points=pts, polys=[self.DONUT])
             .toPandas().set_index("site_id").sort_index()
         )
         want = np.where(pip._ray_cast_rings(lat, lon, rings), 3, -1)
         assert (got["poly_id"].values == want).all()
+
+    @pytest.mark.parametrize(
+        "poly", [TestHybridPIP.L_SHAPE, DONUT], ids=["l_shape", "donut"]
+    )
+    def test_general_polygons_stay_in_jvm(self, spark, poly):
+        """Concave rings and holes take the same broadcast plan as the
+        convex layer: the rim's ray cast is SQL, so no shuffle and no
+        Python/Arrow eval."""
+        import re
+
+        import numpy as np
+        import pandas as pd
+
+        from geospatial_store_siting_spark.functions import hexgrid
+        from geospatial_store_siting_spark.operators import pip
+
+        rng = np.random.default_rng(13)
+        lat = rng.uniform(41.79, 41.97, 200)
+        lon = rng.uniform(-87.71, -87.53, 200)
+        pts = spark.createDataFrame(pd.DataFrame({
+            "site_id": np.arange(200), "lat": lat, "lon": lon,
+            "h3_res8": hexgrid.latlng_to_cell(lat, lon, 8)}))
+        plan = (
+            pip.pip_join(spark, points=pts, polys=[poly])
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert "BroadcastHashJoin" in plan
+        assert not re.search(r"(?<!Broadcast)Exchange", plan)
+        assert "Python" not in plan and "ArrowEval" not in plan
 
 
 class TestDistributedPIP:
@@ -1473,7 +1520,9 @@ class TestDistributedPIP:
     def test_distributed_matches_case_on_synthetic_layer(self, geo):
         from geospatial_store_siting_spark.operators import pip
 
-        got = pip.pip_cover_join_distributed(geo)
+        got = pip.pip_join(geo, polys=pip.polygons_df(geo)).select(
+            "site_id", "poly_id", "poly_zone"
+        )
         pid, zone = pip.pip_zone_case_sql("lat", "lon")
         want = geo.table("sites").select(
             "site_id",
@@ -1489,7 +1538,7 @@ class TestDistributedPIP:
         from geospatial_store_siting_spark.operators import pip
 
         plan = (
-            pip.pip_cover_join_distributed(geo)
+            pip.pip_join(geo, polys=pip.polygons_df(geo))
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "ShuffledHashJoin" in plan
@@ -1509,7 +1558,7 @@ class TestDistributedPIP:
         }
         drv = {
             (r["cell"], r["poly_id"], r["priority"], r["interior"])
-            for r in pip.polygon_cell_cover_general(pip.synthetic_polygons())
+            for r in pip.polygon_cell_cover(pip.synthetic_polygons())
         }
         assert dist == drv
 
@@ -1538,7 +1587,7 @@ class TestDistributedPIP:
             "site_id": np.arange(1500), "lat": lat, "lon": lon,
             "h3_res8": hexgrid.latlng_to_cell(lat, lon, 8)}))
         got = (
-            pip.pip_cover_join_distributed(spark, points=pts, polys=layer)
+            pip.pip_join(spark, points=pts, polys=layer)
             .toPandas().set_index("site_id").sort_index()
         )
         want = np.where(pip._ray_cast_rings(lat, lon, pip._rings(donut)), 3, -1)
