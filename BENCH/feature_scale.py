@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from geospatial_store_siting_spark.operators import features, scoring  # noqa: E402
+from geospatial_store_siting_spark.operators import features, plan_choice, scoring  # noqa: E402
 from geospatial_store_siting_spark.session import get_spark  # noqa: E402
 from geospatial_store_siting_spark.sources import tables  # noqa: E402
 
@@ -56,9 +56,8 @@ def main() -> None:
         )
     spark.read.parquet(big_path).createOrReplaceTempView("sites")
     # the replicated view replaced the snapshot-backed one: drop the stale
-    # manifest row counts so the broadcast gate decides from real counts
-    features.record_table_rows(spark, {})
-    features.invalidate_dim_cache(spark)
+    # manifest row counts so the size gates decide from real counts
+    plan_choice.record_table_rows(spark, {})
 
     def run(fn):
         fn(spark).write.mode("overwrite").format("noop").save()  # warm
@@ -80,17 +79,17 @@ def main() -> None:
         t_feat, n_feat = run(features.location_features)
 
     # the WINDOWED assembly on the SAME input (what runs above
-    # BROADCAST_DIM_LIMIT): with dims this small the broadcast-blocked plan
+    # the dim gate): with dims this small the broadcast-blocked plan
     # is rightly faster — the gate picks it — but the windowed plan must
     # stay within a small factor here because it is the only feasible plan
     # once dims outgrow broadcast (next section)
-    old_limit = features.BROADCAST_DIM_LIMIT
+    old_limit = plan_choice.DIM_LIMIT
     if not skip_base:
-        features.BROADCAST_DIM_LIMIT = 0
+        plan_choice.DIM_LIMIT = 0
         try:
             t_win, n_win = run(features.location_features)
         finally:
-            features.BROADCAST_DIM_LIMIT = old_limit
+            plan_choice.DIM_LIMIT = old_limit
         t_score, n_score = run(lambda s: scoring.score_candidates(s))
 
     # --- constant-density volume growth: BOTH sides x{repl}, each replica
@@ -119,12 +118,11 @@ def main() -> None:
             .write.mode("overwrite").parquet(big_comp)
     spark.read.parquet(big_sites2).createOrReplaceTempView("sites")
     spark.read.parquet(big_comp).createOrReplaceTempView("competitors")
-    features.record_table_rows(spark, {})
-    features.invalidate_dim_cache(spark)
+    plan_choice.record_table_rows(spark, {})
     n_sites2 = spark.table("sites").count()
     n_comp2 = spark.table("competitors").count()
     blocked_pairs = n_sites2 * (n_comp2 // 5)  # per-metro block, 5 metros
-    features.BROADCAST_DIM_LIMIT = 0  # dims grew with volume: gate shut
+    plan_choice.DIM_LIMIT = 0  # dims grew with volume: gate shut
     try:
         # single timed run (the warm inside run() would triple a minutes-
         # long job); first-run JIT is a small share at this wall time
@@ -135,7 +133,7 @@ def main() -> None:
         n_win2 = n_sites2  # the assembly emits one row per site — a
         # count() here would re-execute the whole minutes-long plan
     finally:
-        features.BROADCAST_DIM_LIMIT = old_limit
+        plan_choice.DIM_LIMIT = old_limit
 
     print(
         json.dumps(

@@ -22,7 +22,7 @@ import json, os, sys, time
 sys.path.insert(0, %(repo)r)
 from pyspark.sql import functions as F
 from geospatial_store_siting_spark.session import get_spark
-from geospatial_store_siting_spark.operators import dedup
+from geospatial_store_siting_spark.operators import dedup, plan_choice
 from geospatial_store_siting_spark.sources import tables
 
 cores = int(sys.argv[1]); repl = int(sys.argv[2]); sf_dir = sys.argv[3]
@@ -82,15 +82,15 @@ t, _ = timed(lambda: dedup._band_buckets(batch_sigs)
 out["batch_band_explode_sec"] = round(t, 3)
 
 fp_idx, band_idx, sig_idx = dedup.ingest_probe_index(spark, big_path)
-small = dedup._corpus_small(spark)
+small = plan_choice.small(spark, "documents")
 bfp = docs.filter(F.col("incoming")).select("doc_id", "fp")
-t, _ = timed(lambda: dedup._scale_hint(bfp, small).join(fp_idx, "fp")
+t, _ = timed(lambda: plan_choice.scale_hint(bfp, small).join(fp_idx, "fp")
              .select("doc_id", "exact_match")
              .write.mode("overwrite").format("noop").save())
 out["exact_probe_sec"] = round(t, 3)
 
 bb = dedup._band_buckets(batch_sigs)
-t, _ = timed(lambda: dedup._scale_hint(bb, small).join(band_idx, ["bkey"])
+t, _ = timed(lambda: plan_choice.scale_hint(bb, small).join(band_idx, ["bkey"])
              .select("doc_id", "cdoc").distinct()
              .write.mode("overwrite").format("noop").save())
 out["band_probe_sec"] = round(t, 3)

@@ -63,7 +63,7 @@ def workload():
     # side.  Ring aggs / scoring have constant cost at fixed output size
     # and would only measure driver-side planning overhead here.
     a = features.competition_distance(spark, sites_df=big)
-    b = features.cannibalization(spark, sites_df=big, stores_df=orig)
+    b = features.cannibalization(spark, sites_df=big)
     for df in (a, b):
         df.write.mode("overwrite").format("noop").save()
 

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exprs import dround
+from . import plan_choice
 from .text_ops import token_count_sql
 
 N_SHINGLE_WORDS = 3
@@ -131,42 +132,6 @@ def _content_key(content_sql: str, code=()) -> str:
     return content_sql + "|code:" + hashlib.md5(src.encode()).hexdigest()
 
 
-# Broadcast gate for corpus-sized join sides.  Below this many documents
-# the banded bucket tables and signature tables are genuinely small and
-# Catalyst's broadcast pick is the fast plan; above it every pair join is
-# hinted SHUFFLE_HASH so no corpus-derived table is ever collected to the
-# driver and re-shipped whole to every executor.  Measured rationale
-# (BENCH/profile_dedup.py): localCheckpoint/stage stats under-estimate at
-# harness scale and Catalyst planned the 10M-row band table AND both
-# signature sides of the refine join as broadcasts — a driver-serial
-# build+ship that did not scale at all from local[4] to local[16]
-# (pairs stage 6.4 s -> 6.7 s) and dragged N->4N efficiency to 0.544.
-# At 10^12 docs the same plan is a driver OOM, not just a straggler.
-DEDUP_BROADCAST_DOC_LIMIT = 100_000
-
-
-def _corpus_small(
-    spark: SparkSession, table: str = "documents", limit: int | None = None
-) -> bool:
-    """Manifest-stats gate (shared protocol with features._dim_small):
-    decides from the registered table's manifest row count when
-    available, falling back to ONE cached count per session — never a
-    per-query count job."""
-    from .features import _dim_small
-
-    if limit is None:
-        limit = DEDUP_BROADCAST_DOC_LIMIT  # read at call time (testable)
-    return _dim_small(spark.table(table), limit, table_hint=table)
-
-
-def _scale_hint(df: DataFrame, small: bool) -> DataFrame:
-    """Above the gate: pin the scale-safe shuffled hash join (hash on the
-    join key, per-partition build — no driver collect, no full-table
-    ship).  The hint survives aliasing, so one call covers both sides of
-    a self-join."""
-    return df if small else df.hint("shuffle_hash")
-
-
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
@@ -213,12 +178,12 @@ def ngram_jaccard_pairs(
         sf_dir,
         code=(shingles,),
     )
-    small = _corpus_small(spark)
-    sizes = _scale_hint(
+    small = plan_choice.small(spark, "documents")
+    sizes = plan_choice.scale_hint(
         sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("size")), small
     )
     postings = sh.join(
-        _scale_hint(
+        plan_choice.scale_hint(
             sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") <= DF_CAP),
@@ -226,7 +191,7 @@ def ngram_jaccard_pairs(
         ),
         "shingle",
     )
-    postings = _scale_hint(postings, small)
+    postings = plan_choice.scale_hint(postings, small)
     a = postings.select(F.col("doc_id").alias("a"), "shingle")
     b = postings.select(F.col("doc_id").alias("b"), "shingle")
     inter = (
@@ -468,8 +433,8 @@ def minhash_lsh_pairs(
     generator explode rather than a UNION of per-band selects (which
     would re-execute the signature plan per band)."""
     packed = _packed_signatures(spark, sf_dir, force_stage)
-    small = _corpus_small(spark)
-    buckets = _scale_hint(_band_buckets(packed), small)
+    small = plan_choice.small(spark, "documents")
+    buckets = plan_choice.scale_hint(_band_buckets(packed), small)
     cand = (
         buckets.alias("x")
         .join(buckets.alias("y"), ["bkey"])
@@ -477,10 +442,10 @@ def minhash_lsh_pairs(
         .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
         .distinct()
     )
-    sa = _scale_hint(
+    sa = plan_choice.scale_hint(
         packed.select(F.col("doc_id").alias("a"), F.col("sig").alias("sig_a")), small
     )
-    sb = _scale_hint(
+    sb = plan_choice.scale_hint(
         packed.select(F.col("doc_id").alias("b"), F.col("sig").alias("sig_b")), small
     )
     return (
@@ -607,7 +572,7 @@ def simhash(spark: SparkSession) -> DataFrame:
         f" THEN {2 ** b} ELSE 0 END"
         for b in range(SIMHASH_BITS)
     )
-    hint = "" if _corpus_small(spark) else "/*+ REPARTITION(doc_id) */ "
+    hint = "" if plan_choice.small(spark, "documents") else "/*+ REPARTITION(doc_id) */ "
     sql = f"""
 WITH tok AS (
   SELECT doc_id, CAST(conv(substring(md5(tok), 1, {SIMHASH_BITS // 4}), 16, 10) AS BIGINT) AS v
@@ -678,8 +643,8 @@ def simhash_pairs(
             for b in range(SIMHASH_BANDS)
         ]
     )
-    small = _corpus_small(spark)
-    buckets = _scale_hint(
+    small = plan_choice.small(spark, "documents")
+    buckets = plan_choice.scale_hint(
         sig.select("doc_id", F.explode(band_structs).alias("bb")).select(
             "doc_id", F.col("bb.band").alias("band"), F.col("bb.segment").alias("segment")
         ),
@@ -692,10 +657,10 @@ def simhash_pairs(
         .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
         .distinct()
     )
-    sa = _scale_hint(
+    sa = plan_choice.scale_hint(
         sig.select(F.col("doc_id").alias("a"), F.col("simhash").alias("sig_a")), small
     )
-    sb = _scale_hint(
+    sb = plan_choice.scale_hint(
         sig.select(F.col("doc_id").alias("b"), F.col("simhash").alias("sig_b")), small
     )
     return (
@@ -777,8 +742,8 @@ def embedding_near_dup(
             .filter(F.col("a") < F.col("b"))
         )
     else:
-        buckets = _scale_hint(
-            _emb_band_buckets(spark), _corpus_small(spark, table="embeddings")
+        buckets = plan_choice.scale_hint(
+            _emb_band_buckets(spark), plan_choice.small(spark, "embeddings")
         )
         cand = (
             buckets.alias("x")
@@ -787,11 +752,11 @@ def embedding_near_dup(
             .select(F.col("x.vec_id").alias("a"), F.col("y.vec_id").alias("b"))
             .distinct()
         )
-    small = _corpus_small(spark, table="embeddings")
-    ea = _scale_hint(
+    small = plan_choice.small(spark, "embeddings")
+    ea = plan_choice.scale_hint(
         emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("ea")), small
     )
-    eb = _scale_hint(
+    eb = plan_choice.scale_hint(
         emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("eb")), small
     )
     pairs = cand.join(ea, "a").join(eb, "b")
@@ -892,7 +857,7 @@ def near_dup_components(
     )
     return connected_components(
         spark, edges, max_iter=max_iter, sf_dir=sf_dir, content_key=edges_key,
-        assume_small=_corpus_small(spark),
+        assume_small=plan_choice.small(spark, "documents"),
     ).select(F.col("node").alias("doc_id"), F.col("label").alias("component"))
 
 
@@ -928,7 +893,7 @@ def connected_components(
     just-materialized table — no extra labels⋈new join per round.
 
     ``assume_small=False`` (callers gate it on corpus size, see
-    ``_corpus_small``) pins every per-round join to SHUFFLE_HASH: the
+    ``plan_choice.small``) pins every per-round join to SHUFFLE_HASH: the
     label and symmetric-edge tables are node/edge-scale, and a stats
     misestimate that broadcast them would serialize every round on a
     driver-side hash-table build (or OOM outright at graph scale).
@@ -957,9 +922,9 @@ def connected_components(
         "cc_labels_r0",
     )
     for i in range(max_iter):
-        lab_h = _scale_hint(labels, assume_small)
-        nbr = _scale_hint(
-            _scale_hint(sym, assume_small)
+        lab_h = plan_choice.scale_hint(labels, assume_small)
+        nbr = plan_choice.scale_hint(
+            plan_choice.scale_hint(sym, assume_small)
             .join(lab_h.withColumnRenamed("node", "__n"), F.col("b") == F.col("__n"))
             .groupBy("a")
             .agg(F.min("label").alias("nbr_min")),
@@ -973,7 +938,7 @@ def connected_components(
             ),
         )
         # pointer doubling: label <- label's label
-        parent = _scale_hint(
+        parent = plan_choice.scale_hint(
             step.select(F.col("node").alias("__pn"), F.col("label").alias("__pl")),
             assume_small,
         )
@@ -1123,9 +1088,9 @@ def decontaminate(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
         sf_dir,
         code=(shingles,),
     )
-    small = _corpus_small(spark)
+    small = plan_choice.small(spark, "documents")
     rare = sh.join(
-        _scale_hint(
+        plan_choice.scale_hint(
             sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") <= DF_CAP),
@@ -1146,7 +1111,7 @@ def decontaminate(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
     # derived from it rides the broadcast gate like the shingle tables
     eval_shingles = (
         rare.join(
-            _scale_hint(
+            plan_choice.scale_hint(
                 split_of.filter(F.col("split") == "test").select("doc_id"), small
             ),
             "doc_id",
@@ -1156,19 +1121,19 @@ def decontaminate(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
         .distinct()
     )
     train_shingles = rare.join(
-        _scale_hint(
+        plan_choice.scale_hint(
             split_of.filter(F.col("split") == "train").select("doc_id"), small
         ),
         "doc_id",
         "left_semi",
     )
     hits = (
-        train_shingles.join(_scale_hint(eval_shingles, small), "shingle")
+        train_shingles.join(plan_choice.scale_hint(eval_shingles, small), "shingle")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_eval_shingles"))
     )
     return hits.join(
-        _scale_hint(split_of.select("doc_id", "lang"), small), "doc_id"
+        plan_choice.scale_hint(split_of.select("doc_id", "lang"), small), "doc_id"
     ).select("doc_id", "lang", "n_eval_shingles")
 
 
@@ -1242,7 +1207,7 @@ def dedup_incremental(
     docs = spark.table("documents").select(
         "doc_id", F.md5("text").alias("fp"), incoming.alias("incoming")
     )
-    small = _corpus_small(spark)
+    small = plan_choice.small(spark, "documents")
     packed = _packed_signatures(spark, sf_dir)
     # the batch side reads the shared stage too (the split is over the
     # registered table, so its signatures are already committed).
@@ -1366,7 +1331,7 @@ def _corpus_probe_side(marked: DataFrame, packed: DataFrame, small: bool):
         .groupBy("fp")
         .agg(F.min("doc_id").alias("exact_match"))
     )
-    cmark = _scale_hint(marked.select("doc_id", "incoming"), small)
+    cmark = plan_choice.scale_hint(marked.select("doc_id", "incoming"), small)
     corpus_packed = (
         packed.join(cmark, "doc_id").filter(~F.col("incoming")).select("doc_id", "sig")
     )
@@ -1406,14 +1371,14 @@ def _classify_batch(
     plan-asserted) — r6 replaced the earlier inner + left-join-back
     form, which paid two extra batch exchanges for the same rows."""
     exact = (
-        _scale_hint(batch_fp, small)
+        plan_choice.scale_hint(batch_fp, small)
         .join(corpus_fp, "fp", "left")
         .select("doc_id", "exact_match")
     )
     if batch_buckets is None:
         batch_buckets = _band_buckets(batch_sigs)
     cand = (
-        _scale_hint(batch_buckets, small)
+        plan_choice.scale_hint(batch_buckets, small)
         .join(corpus_buckets, ["bkey"])
         .select("doc_id", "cdoc")
         .distinct()
@@ -1422,12 +1387,12 @@ def _classify_batch(
     # re-hint the composite batch side before the corpus join: a strategy
     # hint is consumed by the join directly above it, so the cand hint
     # alone would leave the refine join free to broadcast/build corpus
-    refine = _scale_hint(cand, small).join(
-        _scale_hint(batch_sigs.select("doc_id", F.col("sig").alias("sig_a")), small),
+    refine = plan_choice.scale_hint(cand, small).join(
+        plan_choice.scale_hint(batch_sigs.select("doc_id", F.col("sig").alias("sig_a")), small),
         "doc_id",
     )
     near = (
-        _scale_hint(refine, small)
+        plan_choice.scale_hint(refine, small)
         .join(corpus_sigs, "cdoc")
         .withColumn("est", est)
         .filter(F.col("est") >= threshold)
@@ -1437,7 +1402,7 @@ def _classify_batch(
     # the near table is batch-doc-level — still corpus-growth-sized, so it
     # rides the same gate (a broadcast here is a driver collect of every
     # near-dup verdict in the ingest)
-    out = exact.join(_scale_hint(near, small), "doc_id", "left")
+    out = exact.join(plan_choice.scale_hint(near, small), "doc_id", "left")
     status = (
         F.when(F.col("exact_match").isNotNull(), F.lit("exact_dup"))
         .when(F.col("near_match").isNotNull(), F.lit("near_dup"))
@@ -1468,7 +1433,7 @@ def classify_arrivals(
     side still reads the shared durable stage."""
     from .sampling import _u_col
 
-    small = _corpus_small(spark)
+    small = plan_choice.small(spark, "documents")
     if sf_dir:
         # service posture: the micro-batch probes the committed bucketed
         # index — no corpus-side derivation or shuffle inside the trigger

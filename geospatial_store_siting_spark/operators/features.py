@@ -21,13 +21,13 @@ Scale design (100 TB posture):
 - the grid join shuffles on cell_id: high-cardinality, near-uniform key
   (urban-core skew handled by operators/skew.py salting when a cell's
   entity list explodes);
-- distance families dispatch on the broadcast gate: metro-blocked
-  broadcast joins below BROADCAST_DIM_LIMIT (exact, and fastest while the
+- distance families dispatch on the dim gate (operators/plan_choice.py):
+  metro-blocked broadcast joins below it (exact, and fastest while the
   dim ships), the windowed cell-prefix plans above it (dim-side ring
   explode + high-cardinality hash join — the only plan whose pair count
   grows linearly when BOTH sides grow; measured in BENCH/feature_scale.py);
-- the gate reads manifest row counts (record_table_rows) — deciding a
-  plan never runs a count() job;
+- every table these gates ask about has a snapshot-manifest row count, so
+  deciding a feature plan never runs a count() job;
 - aggregations are single-pass partial+final hash aggs (map-side combine;
   no COUNT(DISTINCT) where join pairs are provably unique per group —
   DISTINCT would add an Expand replica of the pair table per aggregate);
@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from ..config import DISTANCE_FLOOR_MILES, GRAVITY_EPS, TRADE_AREA_RADIUS_MILES
 from ..functions import hex_sql
 from ..functions.exprs import dround
-from . import rings
+from . import plan_choice, rings
 
 MILES = TRADE_AREA_RADIUS_MILES
 
@@ -227,9 +227,7 @@ GROUP BY site_id"""
 # ---------------------------------------------------------------------------
 
 def competition_distance(
-    spark: SparkSession,
-    sites_df: DataFrame | None = None,
-    competitors_df: DataFrame | None = None,
+    spark: SparkSession, sites_df: DataFrame | None = None
 ) -> DataFrame:
     """Nearest-competitor distance + gravity intensity.
 
@@ -242,7 +240,7 @@ def competition_distance(
     sites = (sites_df if sites_df is not None else spark.table("sites")).select(
         "site_id", "metro", "lat", "lon"
     )
-    comp = (competitors_df if competitors_df is not None else spark.table("competitors")).select(
+    comp = spark.table("competitors").select(
         F.col("metro").alias("c_metro"),
         F.col("lat").alias("c_lat"),
         F.col("lon").alias("c_lon"),
@@ -253,8 +251,7 @@ def competition_distance(
     # blocked join shuffles both sides (the assembly switches to
     # competition_distance_windowed instead — cell-prefix candidates, no
     # metro block; see location_features)
-    hint = "competitors" if competitors_df is None else None
-    comp = F.broadcast(comp) if _dim_small(comp, table_hint=hint) else comp
+    comp = F.broadcast(comp) if plan_choice.small(spark, "competitors") else comp
     pairs = sites.join(comp, sites.metro == F.col("c_metro"), "inner")
     d = haversine_col(F.col("lat"), F.col("lon"), F.col("c_lat"), F.col("c_lon"))
     pairs = pairs.withColumn("dist_miles", d)
@@ -310,57 +307,6 @@ SELECT site_id,
            AS competitors_3mi
 FROM pairs
 GROUP BY site_id"""
-
-
-# Broadcast gate: force-broadcast the dim side of the blocked distance
-# joins only while it is provably small; above this, the plan must not
-# depend on shipping the whole competitor/store table to every executor.
-BROADCAST_DIM_LIMIT = 1_000_000
-_DIM_CACHE_ATTR = "_gss_dim_count_cache"
-_TABLE_ROWS_ATTR = "_gss_table_rows"
-
-
-def invalidate_dim_cache(spark: SparkSession) -> None:
-    """Drop the per-session dim-count cache. Called whenever tables/views
-    are (re)registered, so a view re-registered with more rows under an
-    identical logical plan cannot reuse a stale count."""
-    if hasattr(spark, _DIM_CACHE_ATTR):
-        getattr(spark, _DIM_CACHE_ATTR).clear()
-
-
-def record_table_rows(spark: SparkSession, rows: dict[str, int]) -> None:
-    """Publish manifest-recorded row counts for the registered views
-    (sources/tables.py calls this from the snapshot manifests) so the
-    broadcast gate can decide without running a count() job."""
-    setattr(spark, _TABLE_ROWS_ATTR, dict(rows))
-
-
-def _dim_small(df: DataFrame, limit: int | None = None,
-               table_hint: str | None = None) -> bool:
-    if limit is None:
-        limit = BROADCAST_DIM_LIMIT  # read at call time (testable/tunable)
-    spark = df.sparkSession
-    if table_hint is not None:
-        n = (getattr(spark, _TABLE_ROWS_ATTR, None) or {}).get(table_hint)
-        if n is not None:
-            # The manifest row count of the backing table is an upper bound
-            # on any filtered/projected dim derived from it: no count() job
-            # either way.  Above the limit this is conservative (a heavily
-            # filtered dim might still be small) — the non-broadcast plan
-            # is correct at any size, so conservatism is the scale-safe
-            # direction.
-            return n <= limit
-    # Cache lives ON the SparkSession object (not a module global keyed by
-    # id()): it dies with the session, a recycled id() can't alias two
-    # sessions, and invalidate_dim_cache() clears it on view registration.
-    cache = getattr(spark, _DIM_CACHE_ATTR, None)
-    if cache is None:
-        cache = {}
-        setattr(spark, _DIM_CACHE_ATTR, cache)
-    key = df._jdf.queryExecution().logical().semanticHash()
-    if key not in cache:
-        cache[key] = df.count()
-    return cache[key] <= limit
 
 
 WINDOW_RING_K = 5  # res-7 ring radius for windowed distance features
@@ -632,9 +578,7 @@ FROM sites s LEFT JOIN med m ON s.metro = m.metro"""
 # ---------------------------------------------------------------------------
 
 def cannibalization(
-    spark: SparkSession,
-    sites_df: DataFrame | None = None,
-    stores_df: DataFrame | None = None,
+    spark: SparkSession, sites_df: DataFrame | None = None
 ) -> DataFrame:
     """Gravity-weighted own-store pressure within 3 miles, excluding self
     (`notebooks/10_feature_engineering.py:379-406`)."""
@@ -642,7 +586,7 @@ def cannibalization(
         "site_id", "metro", "lat", "lon"
     )
     stores = (
-        (stores_df if stores_df is not None else spark.table("sites"))
+        spark.table("sites")
         .filter(F.col("site_type") == "store")
         .select(
             F.col("site_id").alias("store_id"),
@@ -651,8 +595,7 @@ def cannibalization(
             F.col("lon").alias("s_lon"),
         )
     )
-    hint = "sites" if stores_df is None else None
-    stores = F.broadcast(stores) if _dim_small(stores, table_hint=hint) else stores
+    stores = F.broadcast(stores) if plan_choice.small(spark, "sites") else stores
     pairs = sites.join(stores, sites.metro == F.col("cb_metro"), "inner").filter(
         F.col("site_id") != F.col("store_id")
     )
@@ -697,7 +640,7 @@ GROUP BY site_id"""
 def cannibalization_windowed(spark: SparkSession) -> DataFrame:
     """cannibalization without the metro block / full-store broadcast:
     own-store candidates from the coarse-cell ring window, self-excluded —
-    the at-scale twin the assembly uses above BROADCAST_DIM_LIMIT.
+    the at-scale twin the assembly uses above the dim gate.
 
     cannibalization_risk is exact w.r.t. the 3-mile radius (the ring
     window strictly contains it); nearest_own_store_miles is
@@ -834,7 +777,7 @@ def _cell_families(spark: SparkSession) -> DataFrame:
     rows that contribute NULL (skipped) or an explicit 0.0 term cannot
     change any aggregate value, so the fused output is bit-identical —
     oracle-checked against the unfused per-family SQL."""
-    from .huff import _dist2_sql, _gravity2_sql, denominators_for_join
+    from .huff import _dist2_sql, _gravity2_sql, hex_denominators
 
     sites = spark.table("sites")
     pairs = rings.ring_pairs(
@@ -869,7 +812,8 @@ def _cell_families(spark: SparkSession) -> DataFrame:
             )
         )
     )
-    denom = denominators_for_join(spark)
+    denom = hex_denominators(spark)
+    denom = F.broadcast(denom) if plan_choice.small(spark, "hex_grid") else denom
     joined = pairs.join(dim, pairs.neighbor_h3 == dim.d_cell, "left").join(
         denom, pairs.neighbor_h3 == denom.cell_id, "left"
     )
@@ -1055,28 +999,17 @@ def location_features(spark: SparkSession, dev_signals: bool = False) -> DataFra
         )
         .repartition("site_id")
     )
-    # Distance families: the metro-blocked broadcast pass only below the
-    # broadcast gate (block key has ~5 distinct values — a skew/parallelism
-    # ceiling if it ever shuffles); above it the assembly switches to the
-    # windowed cell-prefix plans (high-cardinality hash joins, no metro
-    # key, no full-table broadcast).  The gate reads manifest row counts —
-    # no count() job at plan time.
-    comp_small = _dim_small(spark.table("competitors"), table_hint="competitors")
-    stores_small = _dim_small(
-        spark.table("sites").filter(F.col("site_type") == "store"),
-        table_hint="sites",
+    # Distance families: the fused metro-blocked broadcast pass only while
+    # its ONE broadcast (competitors ∪ own stores) fits the dim gate (block
+    # key has ~5 distinct values — a skew/parallelism ceiling if it ever
+    # shuffles); above it the assembly switches to the windowed cell-prefix
+    # plans (high-cardinality hash joins, no metro key, no full-table
+    # broadcast).
+    dist_families = (
+        [_metro_families(spark)]
+        if plan_choice.small(spark, "competitors", "sites")
+        else [competition_distance_windowed(spark), cannibalization_windowed(spark)]
     )
-    if comp_small and stores_small:
-        dist_families = [_metro_families(spark)]
-    else:
-        dist_families = [
-            competition_distance(spark)
-            if comp_small
-            else competition_distance_windowed(spark),
-            cannibalization(spark)
-            if stores_small
-            else cannibalization_windowed(spark),
-        ]
     out = base.join(_cell_families(spark), "site_id", "left")
     for fam in dist_families:
         out = out.join(fam, "site_id", "left")

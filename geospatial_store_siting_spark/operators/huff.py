@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from ..config import DISTANCE_FLOOR_MILES, TRADE_AREA_RADIUS_MILES
 from ..functions import hex_sql
 from ..functions.exprs import dround
-from . import rings
+from . import plan_choice, rings
 from .features import haversine_col
 
 MILES = TRADE_AREA_RADIUS_MILES
@@ -71,19 +71,12 @@ def supply_df(spark: SparkSession) -> DataFrame:
     return stores.unionByName(comp)
 
 
-def _supply_small(spark: SparkSession) -> bool:
-    from .features import _dim_small
-
-    return _dim_small(spark.table("sites"), table_hint="sites") and _dim_small(
-        spark.table("competitors"), table_hint="competitors"
-    )
-
-
 def hex_denominators(spark: SparkSession) -> DataFrame:
     """Per-hex total supply gravity (the Huff denominator).
 
-    Below the broadcast gate: metro-blocked join with the supply dim
-    broadcast (the reference notes ~376 supply rows, L639-646).  Above it:
+    While the supply dim (own stores ∪ competitors) fits the dim gate as
+    ONE broadcast: metro-blocked join with it broadcast (the reference
+    notes ~376 supply rows, L639-646).  Above it:
     the windowed cell-prefix plan — pairwise exact w.r.t. the 3-mile
     radius filter (the ring window strictly contains it), with the same
     metro-key caveat as the distance families: the window ignores metro
@@ -91,7 +84,7 @@ def hex_denominators(spark: SparkSession) -> DataFrame:
     here and not in the blocked form (identical results whenever metros
     are farther apart than the radius, as in any real layout and this
     data)."""
-    if not _supply_small(spark):
+    if not plan_choice.small(spark, "competitors", "sites"):
         return hex_denominators_windowed(spark)
     cells = spark.table("hex_grid").select(
         "cell_id", "metro", "centroid_lat", "centroid_lon", "population"
@@ -130,17 +123,6 @@ def hex_denominators_windowed(spark: SparkSession) -> DataFrame:
     return pairs.groupBy("cell_id").agg(F.sum(_gravity2(F.col("dist2"))).alias("denom"))
 
 
-def denominators_for_join(spark: SparkSession) -> DataFrame:
-    """hex_denominators with the broadcast gate applied (manifest stats,
-    no count() job): broadcast only while the grid is provably small."""
-    from .features import _dim_small
-
-    denom = hex_denominators(spark)
-    if _dim_small(spark.table("hex_grid"), table_hint="hex_grid"):
-        return F.broadcast(denom)
-    return denom
-
-
 def huff_features(spark: SparkSession) -> DataFrame:
     """huff_market_share + huff_demand per site."""
     sites = spark.table("sites")
@@ -158,7 +140,8 @@ def huff_features(spark: SparkSession) -> DataFrame:
     # shuffles; above the gate a grid-scale table must NOT ship to every
     # executor — the plain equi-join shuffles both sides on the
     # high-cardinality cell key instead
-    denom = denominators_for_join(spark)
+    denom = hex_denominators(spark)
+    denom = F.broadcast(denom) if plan_choice.small(spark, "hex_grid") else denom
     j = j.join(denom, "cell_id", "left")
     share = F.col("g_site") / (
         F.coalesce(F.col("denom"), F.lit(0.0))

@@ -26,7 +26,7 @@ Execution shape (the 100-TB posture):
   broadcast congestion dim on the closed-form neighbor id, then one
   min-agg shuffle keyed (site_id, cell_id).  Nothing else shuffles; at a
   sharded-raster scale the broadcast flips to a SHUFFLE_HASH hint exactly
-  like ``dedup._scale_hint``.
+  like ``plan_choice.scale_hint``.
 - Rounds = hop limit (Bellman-Ford over ≤H hops): labels_i = min(labels_{i-1}
   ∪ expand(labels_{i-1})).  Expanding the full label set re-derives some
   dominated paths that the min kills — provably equivalent to the oracle's

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.exprs import dround
+from . import plan_choice
 
 DIM = 64
 QUERY_MOD = 25  # vec_id % QUERY_MOD == 0 → query set (sampled)
@@ -141,16 +142,14 @@ def ann_topk(spark: SparkSession, k: int = 3) -> DataFrame:
     bucket (the scale path — bucket-local joins instead of |Q|·|C|).
 
     Above the corpus-size gate every corpus-derived join side is pinned
-    SHUFFLE_HASH (same rationale as operators/dedup._scale_hint: a stats
-    misestimate that broadcast the bucketed corpus would serialize the
+    SHUFFLE_HASH (same rationale as operators/plan_choice.scale_hint: a
+    stats misestimate that broadcast the bucketed corpus would serialize the
     plan on a driver hash-table build — or OOM it — at embedding-corpus
     scale)."""
-    from .dedup import _corpus_small, _scale_hint
-
-    small = _corpus_small(spark, table="embeddings")
+    small = plan_choice.small(spark, "embeddings")
     b = lsh_buckets(spark)
-    emb = _scale_hint(spark.table("embeddings").select("vec_id", "embedding"), small)
-    withb = _scale_hint(b.join(emb, "vec_id"), small)
+    emb = plan_choice.scale_hint(spark.table("embeddings").select("vec_id", "embedding"), small)
+    withb = plan_choice.scale_hint(b.join(emb, "vec_id"), small)
     qs = withb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"), F.col("bucket"), F.col("embedding").alias("q_emb")
     )
@@ -281,11 +280,9 @@ def ivf_topk(spark: SparkSession, k: int = 3) -> DataFrame:
     inside the probed lists.  The candidate join is an equi-join on the
     list id (shuffle on a 16-ary key at this K; production K ~ √N keeps
     lists balanced and the join key high-cardinality)."""
-    from .dedup import _corpus_small, _scale_hint
-
-    small = _corpus_small(spark, table="embeddings")
+    small = plan_choice.small(spark, "embeddings")
     assign = _ivf_assignments(spark)
-    emb = _scale_hint(spark.table("embeddings").select("vec_id", "embedding"), small)
+    emb = plan_choice.scale_hint(spark.table("embeddings").select("vec_id", "embedding"), small)
     lists = assign.filter(F.col("crank") == 1).select("vec_id", "cid")
     probes = assign.filter(
         (F.col("crank") <= IVF_NPROBE) & (F.col("vec_id") % QUERY_MOD == 0)
@@ -294,7 +291,7 @@ def ivf_topk(spark: SparkSession, k: int = 3) -> DataFrame:
         emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")),
         "query_id",
     )
-    cs = _scale_hint(
+    cs = plan_choice.scale_hint(
         lists.join(emb, "vec_id").select(
             F.col("vec_id").alias("corpus_id"), "cid", F.col("embedding").alias("c_emb")
         ),

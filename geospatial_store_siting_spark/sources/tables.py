@@ -20,6 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import hex_sql
+from ..operators import plan_choice
 
 BASE_TABLES = [
     "region",
@@ -36,9 +37,8 @@ BASE_TABLES = [
 
 
 def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    from ..operators.features import invalidate_dim_cache
-
-    invalidate_dim_cache(spark)  # view contents may change under same plan hash
+    # the plan-choice row map describes the views being replaced: reset it
+    plan_choice.record_table_rows(spark, {})
     out = {}
     for name in BASE_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
@@ -81,9 +81,7 @@ def register_geo_views(
     back to cached logical views (used when sf_dir is unknown).
     """
     from . import snapshots
-    from ..operators.features import invalidate_dim_cache, record_table_rows
 
-    invalidate_dim_cache(spark)
     # base inputs are being (re)registered: any gold stage view published
     # by an earlier pipeline run in this session derives from the OLD
     # inputs — serving it would silently mix provenance (even at the same
@@ -102,11 +100,11 @@ def register_geo_views(
             df = spark.sql(sql_fn()).cache()
         df.createOrReplaceTempView(name)
         out[name] = df
-    # manifest stats feed the broadcast gate (operators/features._dim_small):
+    # manifest stats feed the size gates (operators/plan_choice.py):
     # deciding broadcast-vs-windowed never runs a count() job over
     # snapshot-backed tables.  Replaced wholesale per registration, so a
     # re-load at another scale factor can't leave stale counts behind.
-    record_table_rows(spark, rows)
+    plan_choice.record_table_rows(spark, rows)
     return out
 
 

@@ -1,5 +1,5 @@
 """Pipeline DAG tests: checkpoint/resume semantics + lineage/metrics
-manifests; Arrow kernel parity with the SQL codec path."""
+manifests; SQL codec parity with the numpy hex codec."""
 
 from __future__ import annotations
 
@@ -9,7 +9,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from geospatial_store_siting_spark.functions import kernels
+from geospatial_store_siting_spark.functions import hexgrid
+from geospatial_store_siting_spark.operators import rings
 from geospatial_store_siting_spark.plans import pipeline
 from geospatial_store_siting_spark.sources import tables
 from tests.conftest import SF_DIR, launched_jobs
@@ -72,23 +73,32 @@ def test_resume_launches_no_jobs_beyond_base_reads(geo, cold_run):
 
 
 def test_arrow_kernel_matches_sql_codec(geo):
-    """G1 kernel (Arrow pandas UDF) is bit-identical to the SQL-expression
-    codec that the oracle checks."""
-    sites = geo.table("sites").select("site_id", "lat", "lon", "h3_res8")
-    enc = kernels.make_encode_udf(8)
-    out = sites.withColumn("kernel_cell", enc(F.col("lat"), F.col("lon")))
-    bad = out.filter(F.col("kernel_cell") != F.col("h3_res8")).count()
-    assert bad == 0
-    # string rendering round-trip + validity
-    s = out.withColumn("hex_str", kernels.make_cell_to_string_udf()(F.col("kernel_cell")))
-    assert s.filter(~F.col("hex_str").rlike("^[0-9a-f]{15}$")).count() == 0
+    """G1: the SQL-expression codec that the oracle checks is
+    bit-identical to the numpy codec (encode + string rendering)."""
+    rows = (
+        geo.table("sites")
+        .select("lat", "lon", "h3_res8", F.lower(F.lpad(F.hex("h3_res8"), 15, "0")).alias("s"))
+        .toPandas()
+    )
+    cells = hexgrid.latlng_to_cell(
+        rows["lat"].to_numpy(dtype=np.float64), rows["lon"].to_numpy(dtype=np.float64), 8
+    )
+    assert np.array_equal(cells, rows["h3_res8"].to_numpy(dtype=np.int64))
+    strs = hexgrid.cell_to_string(cells)
+    assert list(strs) == list(rows["s"])
+    assert all(len(x) == 15 and all(c in "0123456789abcdef" for c in x) for x in strs)
 
 
 def test_kring_kernel_sizes(geo):
+    """G3: the SQL ring explode emits exactly the numpy k-ring (7 cells)."""
     sites = geo.table("sites").limit(50)
-    ringed = sites.withColumn("ring", kernels.make_kring_udf(1)(F.col("h3_res8")))
-    sizes = ringed.select(F.size("ring").alias("n")).distinct().collect()
-    assert [r["n"] for r in sizes] == [7]
+    got = {}
+    for r in rings.ring_pairs(geo, sites, 1, extra_cols=["h3_res8"]).collect():
+        got.setdefault((r["site_id"], r["h3_res8"]), []).append(r["neighbor_h3"])
+    assert got
+    for (_, cell), ring in got.items():
+        assert len(ring) == 7
+        assert sorted(ring) == sorted(hexgrid.k_ring(np.array([cell]), 1)[0].tolist())
 
 
 def test_corpus_tiles_reuse_committed_stage(geo, cold_run):

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import re
 
-from geospatial_store_siting_spark.operators import features, knn, scoring
+from geospatial_store_siting_spark.operators import features, knn, plan_choice, scoring
 
 
 def _plan(df) -> str:
@@ -87,12 +87,10 @@ def test_distance_broadcast_is_size_gated(geo, monkeypatch):
     (its only broadcast is the literal ring-offsets dimension)."""
     from geospatial_store_siting_spark.operators import features as feats_mod
 
-    monkeypatch.setattr(feats_mod, "BROADCAST_DIM_LIMIT", 0)
-    feats_mod.invalidate_dim_cache(geo)
+    monkeypatch.setattr(plan_choice, "DIM_LIMIT", 0)
     gated = feats_mod.competition_distance(geo)
     assert "ResolvedHint" not in gated._jdf.queryExecution().logical().toString()
     monkeypatch.undo()
-    feats_mod.invalidate_dim_cache(geo)
 
     windowed = feats_mod.competition_distance_windowed(geo)
     plan = _plan(windowed)

@@ -6,7 +6,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from geospatial_store_siting_spark.operators import dedup, events_ops, features, ml
+from geospatial_store_siting_spark.operators import dedup, events_ops, ml, plan_choice
+from geospatial_store_siting_spark.sources import tables
+from tests.conftest import SF_DIR
 
 
 def _mk_events(spark, rows):
@@ -88,13 +90,16 @@ def test_huff_beta_calibration_argmax_unique(geo):
 
 
 def test_dim_cache_invalidation(geo):
-    sites = geo.table("sites")
-    features.invalidate_dim_cache(geo)
-    assert features._dim_small(sites, limit=10 ** 9)
-    cache = getattr(geo, features._DIM_CACHE_ATTR)
-    assert len(cache) == 1
-    features.invalidate_dim_cache(geo)
-    assert len(cache) == 0
+    """register_tables resets the plan-choice row map: counts of the
+    views it replaces cannot outlive them."""
+    saved = dict(getattr(geo, plan_choice._ROWS_ATTR))
+    try:
+        plan_choice.record_table_rows(geo, {**saved, "documents": 10 ** 9})
+        assert not plan_choice.small(geo, "documents")
+        tables.register_tables(geo, SF_DIR)
+        assert getattr(geo, plan_choice._ROWS_ATTR) == {}
+    finally:
+        plan_choice.record_table_rows(geo, saved)
 
 
 def test_interval_join_is_bucketed_hash_join(geo):

@@ -7,11 +7,27 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geospatial_store_siting_spark.operators import features
+from geospatial_store_siting_spark.operators import features, plan_choice
+from geospatial_store_siting_spark.sources import tables
+from tests.conftest import SF_DIR, launched_jobs
 
 
 def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _no_count(monkeypatch):
+    def boom(self):
+        raise AssertionError("count() job ran during gate decision")
+    monkeypatch.setattr(DataFrame, "count", boom)
+
+
+@pytest.fixture()
+def rows_map(geo):
+    """The session's plan-choice row map, restored after the test."""
+    saved = dict(getattr(geo, plan_choice._ROWS_ATTR))
+    yield saved
+    plan_choice.record_table_rows(geo, saved)
 
 
 class TestAssemblyDistanceGate:
@@ -24,7 +40,7 @@ class TestAssemblyDistanceGate:
         assert "p_coarse" not in plan and "r_coarse" not in plan
 
     def test_above_gate_uses_windowed_plans(self, geo, monkeypatch):
-        monkeypatch.setattr(features, "BROADCAST_DIM_LIMIT", 0)
+        monkeypatch.setattr(plan_choice, "DIM_LIMIT", 0)
         plan = _optimized(features.location_features(geo))
         # no metro-key join anywhere: the 5-distinct-value block key is the
         # scale killer the windowed plans remove
@@ -36,11 +52,36 @@ class TestAssemblyDistanceGate:
         assert "p_coarse" in plan
 
     def test_above_gate_plan_builds_without_count_jobs(self, geo, monkeypatch):
-        monkeypatch.setattr(features, "BROADCAST_DIM_LIMIT", 0)
+        monkeypatch.setattr(plan_choice, "DIM_LIMIT", 0)
         def boom(self):
             raise AssertionError("count() job ran during plan construction")
         monkeypatch.setattr(DataFrame, "count", boom)
         features.location_features(geo)  # gate reads manifest stats only
+
+    def test_fused_broadcasts_gate_on_summed_rows(self, geo, rows_map, monkeypatch):
+        # each dim fits the limit alone, their union does not: neither
+        # fused broadcast (the metro pass's competitors ∪ stores, huff's
+        # supply dim) ships; both switch to their windowed plans
+        plan_choice.record_table_rows(
+            geo, {**rows_map, "competitors": 600_000, "sites": 600_000}
+        )
+        _no_count(monkeypatch)
+        plan = _optimized(features.location_features(geo))
+        assert "d_metro" not in plan  # the fused metro pass
+        assert "s_metro" not in plan  # huff's supply broadcast
+        assert "c_metro" not in plan and "cb_metro" not in plan
+        assert "r_coarse" in plan  # windowed huff denominator
+        assert "p_coarse" in plan  # windowed distance families
+
+    def test_fused_broadcasts_kept_below_summed_limit(self, geo, rows_map, monkeypatch):
+        plan_choice.record_table_rows(
+            geo, {**rows_map, "competitors": 500_000, "sites": 500_000}
+        )
+        _no_count(monkeypatch)
+        plan = _optimized(features.location_features(geo))
+        assert "d_metro" in plan and "s_metro" in plan
+        assert "c_metro" not in plan and "cb_metro" not in plan
+        assert "p_coarse" not in plan and "r_coarse" not in plan
 
     def test_windowed_cannibalization_risk_matches_blocked(self, geo):
         """cannibalization_risk is exact under the window contract (the
@@ -136,26 +177,30 @@ class TestFusedAssemblyEquivalence:
 
 class TestManifestBroadcastGate:
     def test_dim_small_reads_manifest_rows_not_count(self, geo, monkeypatch):
-        def boom(self):
-            raise AssertionError("count() job ran during gate decision")
-        monkeypatch.setattr(DataFrame, "count", boom)
-        assert features._dim_small(geo.table("competitors"), table_hint="competitors")
-        stores = geo.table("sites").filter(F.col("site_type") == "store")
-        # filtered dim: the backing table's manifest count is the upper bound
-        assert features._dim_small(stores, table_hint="sites")
+        _no_count(monkeypatch)
+        # a manifest-backed table never counts; its count bounds any
+        # filtered/projected dim derived from it
+        for t in ("competitors", "sites", "poi", "hex_grid"):
+            assert plan_choice.small(geo, t)
+        assert plan_choice.small(geo, "competitors", "sites")
 
     def test_dim_small_hint_is_conservative_above_limit(self, geo, monkeypatch):
-        def boom(self):
-            raise AssertionError("count() must not run for a hinted dim")
-        monkeypatch.setattr(DataFrame, "count", boom)
-        assert not features._dim_small(
-            geo.table("competitors"), limit=0, table_hint="competitors"
-        )
+        monkeypatch.setattr(plan_choice, "DIM_LIMIT", 0)
+        _no_count(monkeypatch)
+        assert not plan_choice.small(geo, "competitors")
 
-    def test_dim_small_falls_back_to_count_without_hint(self, geo):
-        df = geo.table("competitors").limit(3)
-        assert features._dim_small(df, limit=3)
-        assert not features._dim_small(df, limit=2)
+    def test_dim_small_falls_back_to_count_without_hint(self, geo, rows_map):
+        # documents has no manifest count: counted once per registration,
+        # and the count joins the row map
+        tables.load_all(geo, SF_DIR)
+        assert "documents" not in getattr(geo, plan_choice._ROWS_ATTR)
+        with launched_jobs(geo) as first:
+            assert plan_choice.small(geo, "documents")
+        with launched_jobs(geo) as second:
+            assert plan_choice.small(geo, "documents")
+        assert first and not second
+        n = geo.table("documents").count()
+        assert getattr(geo, plan_choice._ROWS_ATTR)["documents"] == n
 
 
 class TestSnapshotFedSurface:

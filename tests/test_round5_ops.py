@@ -10,7 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from geospatial_store_siting_spark.operators import dedup
+from geospatial_store_siting_spark.operators import dedup, plan_choice
 from geospatial_store_siting_spark.sources import snapshots
 
 
@@ -365,24 +365,24 @@ class TestDedupBroadcastGate:
         return df._jdf.queryExecution().executedPlan().toString()
 
     def test_minhash_pairs_no_broadcast_above_gate(self, geo, monkeypatch):
-        monkeypatch.setattr(dedup, "DEDUP_BROADCAST_DOC_LIMIT", 0)
+        monkeypatch.setattr(plan_choice, "CORPUS_LIMIT", 0)
         plan = self._physical(dedup.minhash_lsh_pairs(geo))
         assert "BroadcastExchange" not in plan
         assert "ShuffledHashJoin" in plan
 
     def test_simhash_pairs_no_broadcast_above_gate(self, geo, monkeypatch):
-        monkeypatch.setattr(dedup, "DEDUP_BROADCAST_DOC_LIMIT", 0)
+        monkeypatch.setattr(plan_choice, "CORPUS_LIMIT", 0)
         plan = self._physical(dedup.simhash_pairs(geo))
         assert "BroadcastExchange" not in plan
         assert "ShuffledHashJoin" in plan
 
     def test_jaccard_pairs_no_broadcast_above_gate(self, geo, monkeypatch):
-        monkeypatch.setattr(dedup, "DEDUP_BROADCAST_DOC_LIMIT", 0)
+        monkeypatch.setattr(plan_choice, "CORPUS_LIMIT", 0)
         plan = self._physical(dedup.ngram_jaccard_pairs(geo))
         assert "BroadcastExchange" not in plan
 
     def test_embedding_near_dup_no_broadcast_above_gate(self, geo, monkeypatch):
-        monkeypatch.setattr(dedup, "DEDUP_BROADCAST_DOC_LIMIT", 0)
+        monkeypatch.setattr(plan_choice, "CORPUS_LIMIT", 0)
         plan = self._physical(dedup.embedding_near_dup(geo))
         assert "BroadcastExchange" not in plan
 
@@ -410,14 +410,14 @@ class TestDedupBroadcastGate:
     def test_ann_topk_no_broadcast_above_gate(self, geo, monkeypatch):
         from geospatial_store_siting_spark.operators import similarity
 
-        monkeypatch.setattr(dedup, "DEDUP_BROADCAST_DOC_LIMIT", 0)
+        monkeypatch.setattr(plan_choice, "CORPUS_LIMIT", 0)
         plan = self._physical(similarity.ann_topk(geo))
         assert "BroadcastExchange" not in plan
 
     def test_ivf_topk_no_broadcast_above_gate(self, geo, monkeypatch):
         from geospatial_store_siting_spark.operators import similarity
 
-        monkeypatch.setattr(dedup, "DEDUP_BROADCAST_DOC_LIMIT", 0)
+        monkeypatch.setattr(plan_choice, "CORPUS_LIMIT", 0)
         plan = self._physical(similarity.ivf_topk(geo))
         assert "BroadcastExchange" not in plan
 
@@ -749,14 +749,14 @@ class TestDecontaminateAndIncremental:
             ).all()
 
     def test_incremental_no_broadcast_above_gate(self, geo, monkeypatch):
-        monkeypatch.setattr(dedup, "DEDUP_BROADCAST_DOC_LIMIT", 0)
+        monkeypatch.setattr(plan_choice, "CORPUS_LIMIT", 0)
         plan = (
             dedup.dedup_incremental(geo)._jdf.queryExecution().executedPlan().toString()
         )
         assert "BroadcastExchange" not in plan
 
     def test_decontaminate_no_broadcast_above_gate(self, geo, monkeypatch):
-        monkeypatch.setattr(dedup, "DEDUP_BROADCAST_DOC_LIMIT", 0)
+        monkeypatch.setattr(plan_choice, "CORPUS_LIMIT", 0)
         plan = (
             dedup.decontaminate(geo)._jdf.queryExecution().executedPlan().toString()
         )
@@ -785,7 +785,7 @@ class TestIngestProbeIndex:
     def test_index_path_bucketed_scans_no_corpus_exchange(self, geo, monkeypatch):
         from tests.conftest import SF_DIR
 
-        monkeypatch.setattr(dedup, "DEDUP_BROADCAST_DOC_LIMIT", 0)
+        monkeypatch.setattr(plan_choice, "CORPUS_LIMIT", 0)
         df = dedup.dedup_incremental(geo, sf_dir=SF_DIR)
         plan_text = df._jdf.queryExecution().executedPlan().toString()
         # all three probe tables (fp, band, sig) scan as bucketed —
@@ -1016,7 +1016,7 @@ class TestCommitArrivals:
         from tests.conftest import SF_DIR
 
         monkeypatch.setattr(snapshots, "DEFAULT_ROOT", str(tmp_path))
-        monkeypatch.setattr(dedup, "DEDUP_BROADCAST_DOC_LIMIT", 0)
+        monkeypatch.setattr(plan_choice, "CORPUS_LIMIT", 0)
         dedup.ingest_probe_index(geo, SF_DIR)
         arrivals = geo.createDataFrame(
             [(910001, " ".join(f"wq{i}" for i in range(50)))],

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from geospatial_store_siting_spark.operators import dedup
+from geospatial_store_siting_spark.operators import dedup, plan_choice
 from geospatial_store_siting_spark.sources import iceberg
 
 
@@ -119,7 +119,7 @@ class TestExactProbeShape:
 
         from tests.conftest import SF_DIR
 
-        monkeypatch.setattr(dedup, "DEDUP_BROADCAST_DOC_LIMIT", 0)
+        monkeypatch.setattr(plan_choice, "CORPUS_LIMIT", 0)
         plan = (
             dedup.dedup_incremental(geo, sf_dir=SF_DIR)
             ._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
