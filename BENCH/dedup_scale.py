@@ -17,10 +17,34 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+
+def replica_docs(spark, repl: int) -> str:
+    """Path of the documents table replicated ×``repl``, written once.
+
+    Replicas are made textually DISTINCT (every token suffixed with the
+    replica id): verbatim copies would all share one minhash signature,
+    giving O(repl^2) pairs inside a few giant LSH buckets — a
+    self-similarity pathology, not corpus growth.  Distinct replicas
+    scale the near-dup structure linearly, like a real larger corpus."""
+    from pyspark.sql import functions as F
+
+    path = os.path.join(REPO, ".snapshots", f"dedup_scale_docs_x{repl}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        reps = spark.range(repl).select(F.col("id").alias("rep"))
+        (spark.table("documents").crossJoin(reps)
+            .withColumn("doc_id", F.concat_ws("_", "doc_id", "rep"))
+            .withColumn("text", F.expr("concat_ws(' ', transform(split(text, ' '), "
+                                       "x -> concat(x, '_', rep)))"))
+            .drop("rep")
+            .repartition(32, "doc_id")
+            .write.mode("overwrite").parquet(path))
+    return path
+
 WORKER = r"""
 import json, os, sys, time
 sys.path.insert(0, %(repo)r)
-from pyspark.sql import functions as F
+sys.path.insert(0, os.path.join(%(repo)r, "BENCH"))
+from dedup_scale import replica_docs
 from geospatial_store_siting_spark.session import get_spark
 from geospatial_store_siting_spark.operators import dedup
 from geospatial_store_siting_spark.sources import tables
@@ -30,25 +54,7 @@ spark = get_spark(app_name=f"dedup-scaling-{cores}", cores=cores,
                   shuffle_partitions=32,
                   extra_conf={"spark.sql.adaptive.coalescePartitions.enabled": "false"})
 tables.register_tables(spark, sf_dir)
-big_path = os.path.join("/root/repo/.snapshots", f"dedup_scale_docs_x{repl}")
-if not os.path.exists(os.path.join(big_path, "_SUCCESS")):
-    reps = spark.range(repl).select(F.col("id").alias("rep"))
-    # replicas are made textually DISTINCT (every token suffixed with the
-    # replica id): verbatim copies would all share one minhash signature,
-    # giving O(repl^2) pairs inside a few giant LSH buckets — a
-    # self-similarity pathology, not corpus growth.  Distinct replicas
-    # scale the near-dup structure linearly, like a real larger corpus.
-    (spark.table("documents").crossJoin(reps)
-        .withColumn("doc_id", F.concat_ws("_", "doc_id", "rep"))
-        .withColumn(
-            "text",
-            F.expr("concat_ws(' ', transform(split(text, ' '), "
-                   "x -> concat(x, '_', rep)))"),
-        )
-        .drop("rep")
-        .repartition(32, "doc_id")
-        .write.mode("overwrite").parquet(big_path))
-spark.read.parquet(big_path).createOrReplaceTempView("documents")
+spark.read.parquet(replica_docs(spark, repl)).createOrReplaceTempView("documents")
 n_docs = spark.table("documents").count()
 
 def workload():

@@ -10,7 +10,8 @@ The workload is the CPU-bound core of the engine (blocked distance joins +
 Huff gravity over a deterministically replicated site table — replication
 just scales row count; every replica flows through the same plan).  Each
 subprocess warms up once, then times the workload; results land in
-BENCH/BASELINE.md.
+BENCH/BASELINE.md only at the default ``SPARK_GRAFT_SF_DIR`` and
+``SCALING_REPL`` (other scales only print them).
 """
 
 from __future__ import annotations
@@ -94,9 +95,13 @@ def run(cores: int, repl: int, sf_dir: str) -> dict:
     raise RuntimeError(f"worker failed: {out.stderr[-2000:]}")
 
 
+DEFAULT_SF_DIR = "/root/testdata/sf0.1"
+DEFAULT_REPL = 256
+
+
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    repl = int(os.environ.get("SCALING_REPL", "256"))
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
+    repl = int(os.environ.get("SCALING_REPL", DEFAULT_REPL))
     # N=4 vs 4N=16 cores: both fit within the machine's 16 PHYSICAL cores.
     # (raw-CPU calibration on this box: 8->32 procs scales only ~3.2x because
     # 32 hardware threads = 16 cores x SMT, an arithmetic ceiling of ~0.79
@@ -118,6 +123,8 @@ def main() -> None:
     eff = (r32["rows_per_sec"] / r8["rows_per_sec"]) / 4.0
     result = {"localN": r8, "local4N": r32, "scaling_efficiency": round(eff, 3)}
     print(json.dumps(result))
+    if (sf_dir, repl) != (DEFAULT_SF_DIR, DEFAULT_REPL):
+        return  # a smoke run at another scale must not replace the record
     md = f"""# BENCH/BASELINE.md — measured numbers (this repo)
 
 Workload: metro-blocked distance joins (competition, cannibalization) +

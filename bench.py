@@ -123,8 +123,9 @@ def force(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def main() -> None:
-    spark = get_spark(app_name="bench", cores=CPUS)
+def prepare(spark) -> dict[str, float]:
+    """The untimed set-up every timed pass starts from; returns the cold
+    seconds of the durable stages it rebuilds."""
     tables.load_all(spark, SF_DIR)
     # warm the cached dim views once so per-query timings measure the
     # operator, not the synthesis scan (same role as snapshot tables at scale)
@@ -158,7 +159,12 @@ def main() -> None:
     for idx in dedup.ingest_probe_index(spark, SF_DIR, force=True):
         idx.count()
     cold["ingest_probe_index"] = round(time.perf_counter() - t0, 3)
+    return cold
 
+
+def main() -> None:
+    spark = get_spark(app_name="bench", cores=CPUS)
+    cold = prepare(spark)
     times: dict[str, float] = {}
     build: dict[str, float] = {}
     rows: dict[str, int] = {}

@@ -272,7 +272,8 @@ def _h48_fast(h: str = "h") -> str:
     portable INSTR chain exactly (property-tested equal row-for-row in
     tests/test_round5_ops.py).  The INSTR chain costs 12 SUBSTRING +
     INSTR string ops per row — measured as ~75%% of a 2.56M-row scan's
-    time (BENCH/profile_ingest.py); conv is one codegen'd intrinsic.
+    time (r6 ingest profile; re-measure: tools/layer_profile.py, leaf
+    dedup_incremental); conv is one codegen'd intrinsic.
     DuckDB has no conv(), so oracles keep ``_h48_sql``."""
     return f"CAST(CONV(REVERSE(SUBSTRING({h}, 1, 12)), 16, 10) AS BIGINT)"
 

@@ -17,11 +17,17 @@ the count joins the map so later gates launch none.
 
 A view replaced outside ``tables.register_*`` keeps its recorded count:
 call ``record_table_rows`` after swapping it.
+
+Every answer is also logged into the open ``observe.span`` (if any) as
+``{tables, rows, limit, small}``, so a stage or leaf readout shows which
+plan branch it took and the sizes behind the choice.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .. import observe
 
 # Dim gate: force-broadcast the dim side of a blocked join only while it
 # is provably small; above this the plan must not depend on shipping a
@@ -31,7 +37,8 @@ DIM_LIMIT = 1_000_000
 # signature tables are genuinely small and Catalyst's broadcast pick is
 # the fast plan; above it every pair join is hinted SHUFFLE_HASH so no
 # corpus-derived table is ever collected to the driver and re-shipped
-# whole to every executor.  Measured rationale (BENCH/profile_dedup.py):
+# whole to every executor.  Measured rationale (the MinHash-LSH scaling
+# section of BENCH/BASELINE.md; tools/layer_profile.py re-measures the plans):
 # localCheckpoint/stage stats under-estimate at harness scale and
 # Catalyst planned the 10M-row band table AND both signature sides of the
 # refine join as broadcasts — a driver-serial build+ship that did not
@@ -61,7 +68,11 @@ def small(spark: SparkSession, *tables: str) -> bool:
             rows[t] = spark.table(t).count()
     corpus = any(t in _CORPUS_TABLES for t in tables)
     # limits read at call time (tests monkeypatch them)
-    return sum(rows[t] for t in tables) <= (CORPUS_LIMIT if corpus else DIM_LIMIT)
+    limit = CORPUS_LIMIT if corpus else DIM_LIMIT
+    total = sum(rows[t] for t in tables)
+    fits = total <= limit
+    observe._note({"tables": list(tables), "rows": total, "limit": limit, "small": fits})
+    return fits
 
 
 def scale_hint(df: DataFrame, fits: bool) -> DataFrame:

@@ -45,7 +45,8 @@ def _u_sql(key: str = "doc_id", seed: str = DEFAULT_SEED) -> str:
 def _u_col(key: str = "doc_id", seed: str = DEFAULT_SEED):
     """Spark-side uniform — same value as ``_u_sql``'s text via the
     conv-based ``_h48_fast`` (the INSTR-chain form was ~75% of corpus-scan
-    time in the ingest-dedup profile, BENCH/profile_ingest.py)."""
+    time in the r6 ingest-dedup profile; re-measure with
+    tools/layer_profile.py, leaf dedup_incremental)."""
     h = f"md5('{seed}|' || CAST({key} AS STRING))"
     return F.expr(f"(CAST(({_h48_fast(h)}) AS DOUBLE) / {_U_SCALE!r})")
 

@@ -15,9 +15,14 @@ checkpointed Spark pipeline per the north rule:
   pipeline's own resume bookkeeping is the run report next to the
   commit: a stage whose ``_stage_report.json`` is present counts as
   resumed;
-- each stage's run report records lineage (input stage names + row
-  counts) and throughput (rows/sec, wall seconds) plus PER-PARTITION row
-  counts (spark_partition_id groupBy — the skew fingerprint);
+- each cold stage runs in one ``observe.span``; its run report records
+  ``stage``, ``lineage`` (input stage names), ``rows``, ``wall_sec``,
+  ``rows_per_sec``, the commit write's per-partition row counts
+  (``partitions``, ``partition_rows``, ``partition_skew``: the skew
+  fingerprint, from task metrics, so no extra job), ``resumed``, and
+  ``spark``: the rest of the span readout (jobs, tasks, task and Python
+  time, shuffle, spill, peak memory, rows and bytes per operator kind,
+  size-gate decisions).  A resumed stage returns its committed report;
 - committed stages are published as session views
   (sources/tables.register_stage_view) so the interactive app surface and
   dev_signal_ring read the gold tables instead of recomputing them; the
@@ -35,31 +40,18 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import time
+from collections import namedtuple
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from .. import observe
 from ..sources import iceberg, snapshots, tables
 
 STAGE_ROOT = os.environ.get("SPARK_GRAFT_STAGE_DIR", "/root/repo/.snapshots/stages")
 
 
-def _partition_histogram(df: DataFrame) -> list[int]:
-    rows = (
-        df.withColumn("__pid", F.spark_partition_id())
-        .groupBy("__pid")
-        .count()
-        .collect()
-    )
-    return [int(r["count"]) for r in sorted(rows, key=lambda r: r["__pid"])]
-
-
-class Stage:
-    def __init__(self, name: str, fn, inputs: list[str]):
-        self.name = name
-        self.fn = fn
-        self.inputs = inputs
+Stage = namedtuple("Stage", "name fn inputs")
 
 
 def _doc_tiles_stage(spark: SparkSession) -> DataFrame:
@@ -142,22 +134,25 @@ def run_pipeline(spark: SparkSession, sf_dir: str, force: bool = False) -> dict:
         if not use_iceberg:
             path = iceberg.stage_path(None, st.name, sf_dir, st.name, root=STAGE_ROOT)
             report_path = os.path.join(path, "_stage_report.json")
-        t0 = time.perf_counter()
-        committed = iceberg.write_stage(
-            spark, lambda: st.fn(spark), st.name, sf_dir,
-            content_key=st.name, root=STAGE_ROOT, force=force,
-        )
-        wall = time.perf_counter() - t0
+        resumed = not force and report_path is not None and os.path.exists(report_path)
+        # a resumed stage takes no readout: its committed report stands
+        with nullcontext() if resumed else observe.span(spark, st.name) as sp:
+            committed = iceberg.write_stage(
+                spark, lambda: st.fn(spark), st.name, sf_dir,
+                content_key=st.name, root=STAGE_ROOT, force=force,
+            )
         tables.register_stage_view(spark, st.name, committed, sf_dir)
-        if report_path is not None and os.path.exists(report_path):
+        if resumed:
             with open(report_path) as f:
                 meta = json.load(f)
             meta["resumed"] = True
             report["stages"].append(meta)
             continue
 
-        parts = _partition_histogram(committed)
-        rows = sum(parts)
+        parts = sp["partition_rows"]
+        # no write task: committed by a run that died before its report
+        rows = sum(parts) if parts else committed.count()
+        wall = sp["wall_s"]
         meta = {
             "stage": st.name,
             "lineage": {"inputs": st.inputs, "sf_dir": sf_dir},
@@ -170,6 +165,10 @@ def run_pipeline(spark: SparkSession, sf_dir: str, force: bool = False) -> dict:
             if parts and sum(parts)
             else None,
             "resumed": False,
+            "spark": {
+                k: v for k, v in sp.items()
+                if k not in ("name", "wall_s", "job_ids", "per_stage", "partition_rows")
+            },
         }
         if report_path is not None:
             snapshots.write_json(report_path, meta)

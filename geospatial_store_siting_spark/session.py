@@ -48,9 +48,10 @@ def get_spark(
         # corpora are O(1 GB) in ~30 MB files, and a FIXED split size
         # serves only one parallelism level — 128 MB packs them into ~11
         # scan tasks (local[16]+ idles cores on every corpus scan,
-        # measured in BENCH/profile_ingest.py), while a flat 32 MB gave
-        # local[4] 4x the tasks with no idle cores to feed and measurably
-        # slowed it (BENCH/scaling.py r5: 79 s -> 97 s at N=4).
+        # measured in the r6 ingest profile; re-measure with
+        # tools/layer_profile.py), while a flat 32 MB gave local[4] 4x
+        # the tasks with no idle cores to feed and measurably slowed it
+        # (BENCH/scaling.py r5: 79 s -> 97 s at N=4).
         # 512 MB/cores targets ~cores splits per ~0.5 GB scan at every
         # level, floored at 32 MB; a real cluster submit overrides this
         # for 100-TB inputs with large files.

@@ -2,8 +2,6 @@ from __future__ import annotations
 
 import os
 import sys
-import uuid
-from contextlib import contextmanager
 
 import duckdb
 import pytest
@@ -38,19 +36,3 @@ def duck():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     return con
-
-
-@contextmanager
-def launched_jobs(spark):
-    """Collect the ids of the Spark jobs the block launches: the block
-    runs under its own job group, read from the status tracker on exit."""
-    sc = spark.sparkContext
-    group = f"launched-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    jobs: list[int] = []
-    try:
-        yield jobs
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed asynchronously
-        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))

@@ -6,8 +6,8 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from geospatial_store_siting_spark import observe
 from geospatial_store_siting_spark.operators import app_queries, quality
-from tests.conftest import launched_jobs
 
 
 def test_quality_gate_passes(geo):
@@ -66,12 +66,10 @@ def test_flag_round_trip_notes_and_schema(geo, tmp_path):
     notes = ['say "hi"', "it's", "back\\slash", "café ☕ 東京", ""]
     for seq, note in enumerate(notes, start=1):
         app_queries.flag_site(geo, path, seq, "review", note=note, seq=seq)
-    with launched_jobs(geo) as jobs:
+    with observe.span(geo, "flag") as sp:
         app_queries.flag_site(geo, path, 99, "shortlist", note="no seq")
-    tracker = geo.sparkContext.statusTracker()
-    assert len(jobs) == 1
-    stages = tracker.getJobInfo(jobs[0]).stageIds
-    assert sum(tracker.getStageInfo(s).numTasks for s in stages) == 1
+    assert len(sp["job_ids"]) == 1
+    assert sp["tasks"] == 1
     assert geo.read.parquet(path).schema == app_queries.FLAG_SCHEMA
     got = {
         r["site_id"]: (r["status"], r["note"], r["seq"])

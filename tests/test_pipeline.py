@@ -9,11 +9,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from geospatial_store_siting_spark import observe
 from geospatial_store_siting_spark.functions import hexgrid
 from geospatial_store_siting_spark.operators import rings
 from geospatial_store_siting_spark.plans import pipeline
 from geospatial_store_siting_spark.sources import tables
-from tests.conftest import SF_DIR, launched_jobs
+from tests.conftest import SF_DIR
 
 
 def _run_at(spark, root):
@@ -63,13 +64,13 @@ def test_resume_launches_no_jobs_beyond_base_reads(geo, cold_run):
     base tables' schema inference: geo/dev view snapshots and gold
     stages are read with their manifests' schemas."""
     root, _ = cold_run
-    with launched_jobs(geo) as jobs:
+    with observe.span(geo, "resume") as sp:
         report = _run_at(geo, root)
     assert all(s["resumed"] for s in report["stages"])
     base = sum(
         os.path.exists(os.path.join(SF_DIR, f"{t}.parquet")) for t in tables.BASE_TABLES
     )
-    assert len(jobs) <= base
+    assert len(sp["job_ids"]) <= base
 
 
 def test_arrow_kernel_matches_sql_codec(geo):

@@ -7,9 +7,10 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geospatial_store_siting_spark import observe
 from geospatial_store_siting_spark.operators import features, plan_choice
 from geospatial_store_siting_spark.sources import tables
-from tests.conftest import SF_DIR, launched_jobs
+from tests.conftest import SF_DIR
 
 
 def _optimized(df) -> str:
@@ -194,11 +195,11 @@ class TestManifestBroadcastGate:
         # and the count joins the row map
         tables.load_all(geo, SF_DIR)
         assert "documents" not in getattr(geo, plan_choice._ROWS_ATTR)
-        with launched_jobs(geo) as first:
+        with observe.span(geo, "first") as first:
             assert plan_choice.small(geo, "documents")
-        with launched_jobs(geo) as second:
+        with observe.span(geo, "second") as second:
             assert plan_choice.small(geo, "documents")
-        assert first and not second
+        assert first["job_ids"] and not second["job_ids"]
         n = geo.table("documents").count()
         assert getattr(geo, plan_choice._ROWS_ATTR)["documents"] == n
 
@@ -238,7 +239,6 @@ class TestSnapshotFedSurface:
         import re
 
         from geospatial_store_siting_spark.operators import app_queries
-        from tests.conftest import launched_jobs
 
         for df in (
             app_queries.location_detail(staged, 42),
@@ -248,9 +248,9 @@ class TestSnapshotFedSurface:
             assert "Join" not in plan, plan
             assert len(re.findall(r"Filter .*site_id", plan)) == 1, plan
             assert df.inputFiles() and all("site_detail" in f for f in df.inputFiles())
-        with launched_jobs(staged) as jobs:
+        with observe.span(staged, "lookup") as sp:
             app_queries.location_detail(staged, 42).toPandas()
-        assert len(jobs) == 1
+        assert len(sp["job_ids"]) == 1
 
     def test_lookups_filter_both_join_inputs(self, staged):
         """With an explicit feature table the lookups join it to the scored

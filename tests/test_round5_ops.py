@@ -357,7 +357,7 @@ class TestDedupBroadcastGate:
     corpus-derived side: localCheckpoint/stage stats under-estimate and
     Catalyst otherwise plans the banded bucket self-join AND both
     signature refine sides as driver-built broadcasts — the non-scaling
-    serial fraction measured in BENCH/profile_dedup.py (pairs stage
+    serial fraction measured in the r5 dedup profile (pairs stage
     6.4 s -> 6.7 s from local[4] to local[16]), and a driver OOM at
     corpus scale."""
 

@@ -53,7 +53,8 @@ class TestStageWarmFastLane:
     def test_key_mismatch_falls_through_to_write(self, spark, tmp_path):
         sf_dir = str(tmp_path / "sf")
         iceberg.write_stage(
-            spark, lambda: spark.range(2), "r6_absent", sf_dir, content_key="old-key"
+            spark, lambda: spark.range(2), "r6_absent", sf_dir, content_key="old-key",
+            root=str(tmp_path / "stages"),
         )
         calls = []
 
@@ -62,7 +63,8 @@ class TestStageWarmFastLane:
             return spark.range(3)
 
         fresh = iceberg.write_stage(
-            spark, build, "r6_absent", sf_dir, content_key="no-such-key"
+            spark, build, "r6_absent", sf_dir, content_key="no-such-key",
+            root=str(tmp_path / "stages"),
         )
         assert calls == [1]
         assert fresh.count() == 3
@@ -74,6 +76,7 @@ class TestStageWarmFastLane:
         )
         written = iceberg.write_stage(
             spark, df, "r6_bidx", sf_dir, content_key="r6-bidx|v1", bucket=("fp", 4),
+            root=str(tmp_path / "stages"),
         )
 
         def boom():
@@ -81,6 +84,7 @@ class TestStageWarmFastLane:
 
         fast = iceberg.write_stage(
             spark, boom, "r6_bidx", sf_dir, content_key="r6-bidx|v1", bucket=("fp", 4),
+            root=str(tmp_path / "stages"),
         )
         assert fast.count() == written.count() == 20
         # the fast-lane reader keeps the bucketed (exchange-free) scan side

@@ -11,8 +11,8 @@ import os
 
 import pytest
 
+from geospatial_store_siting_spark import observe
 from geospatial_store_siting_spark.sources import iceberg, snapshots
-from tests.conftest import launched_jobs
 
 
 def _frame(spark):
@@ -28,9 +28,9 @@ def _frame(spark):
 def test_read_committed_matches_inference_without_a_job(spark, tmp_path):
     path = str(tmp_path / "snap")
     snapshots.commit(spark, lambda: _frame(spark), path)
-    with launched_jobs(spark) as jobs:
+    with observe.span(spark, "warm") as sp:
         got = snapshots.read_committed(spark, path)
-    assert jobs == []
+    assert sp["job_ids"] == []
     inferred = spark.read.parquet(path)
     assert got.schema == inferred.schema
     assert sorted(got.collect()) == sorted(inferred.collect())
@@ -59,13 +59,13 @@ def test_warm_stage_reads_launch_no_job(spark, tmp_path):
     iceberg.write_stage(spark, _frame(spark), "warm", sf_dir, content_key="k", root=root)
     sql = "SELECT id AS site_id, CAST(id AS string) AS note FROM range(4)"
     snapshots.snapshot_table(spark, "warm_sql", sql, sf_dir, root=root)
-    with launched_jobs(spark) as jobs:
+    with observe.span(spark, "warm") as sp:
         fast = iceberg.write_stage(spark, _boom, "warm", sf_dir, content_key="k", root=root)
         again = iceberg.write_stage(
             spark, _frame(spark), "warm", sf_dir, content_key="k", root=root
         )
         snap = snapshots.snapshot_table(spark, "warm_sql", sql, sf_dir, root=root)
-    assert jobs == []
+    assert sp["job_ids"] == []
     assert fast.schema == again.schema
     assert fast.dtypes == _frame(spark).dtypes
     assert snap.columns == ["site_id", "note"]
@@ -108,9 +108,9 @@ def test_warm_commit_builds_nothing(spark, tmp_path, monkeypatch, commit):
     without calling the producer and without launching a job."""
     root = str(tmp_path)
     cold = commit(spark, lambda: _frame(spark), root, monkeypatch)
-    with launched_jobs(spark) as jobs:
+    with observe.span(spark, "warm") as sp:
         warm = commit(spark, _boom, root, monkeypatch)
-    assert jobs == []
+    assert sp["job_ids"] == []
     monkeypatch.undo()
     assert warm.schema == cold.schema
     assert sorted(warm.collect()) == sorted(cold.collect())

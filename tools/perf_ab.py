@@ -10,20 +10,28 @@ working tree as CHANGE_DIR.  For every seed the tool runs
 
 once in each checkout, one run at a time, alternating which side runs
 first from one seed to the next.  The run length T and the end-to-end
-metrics are the ones CHANGE_DIR's ``BENCHMARK.json`` declares.  It prints
-every run, each side's median and quartiles of each metric, and how many
-pairs the change wins.  Exit status is 1 if any run is not ``correct`` (or
+metrics are the ones CHANGE_DIR's ``BENCHMARK.json`` declares, followed by
+the run's two host controls (``cpu_control_s``, ``steal_frac``, parsed
+from the ``host {...}`` record ``perfbench/run.py`` prints to stderr), so
+a host-speed swing shows beside the pair it hits.  It prints every run,
+each side's median and quartiles of each metric, and how many pairs the
+change wins.  Exit status is 1 if any run is not ``correct`` (or
 prints no result), else 0.
 """
 
 from __future__ import annotations
 
 import argparse
+import ast
 import json
 import os
 import statistics
+import re
 import subprocess
 import sys
+
+HOST_CONTROLS = [{"name": "cpu_control_s", "unit": "s", "better": "lower"},
+                 {"name": "steal_frac", "unit": "ratio", "better": "lower"}]
 
 
 def _seeds(spec: str) -> list[int]:
@@ -40,10 +48,14 @@ def _run(checkout: str, workload: str, seed: int, seconds: float) -> dict:
            "--seconds", str(seconds), "--trace", "0"]
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     try:
-        return json.loads(p.stdout.strip().splitlines()[-1])
+        res = json.loads(p.stdout.strip().splitlines()[-1])
     except (IndexError, json.JSONDecodeError):
-        return {"correct": False, "attempted": 0, "failed": 0, "metrics": {},
-                "error": (p.stderr or p.stdout)[-2000:]}
+        res = {"correct": False, "attempted": 0, "failed": 0, "metrics": {},
+               "error": (p.stderr or p.stdout)[-2000:]}
+    host = re.search(r" host (\{.*?\}) latency_s ", p.stderr)
+    for k, v in (ast.literal_eval(host.group(1)) if host else {}).items():
+        res.setdefault("metrics", {})[k] = {"value": v}
+    return res
 
 
 def _summary(values: list[float]) -> tuple[float, float, float]:
@@ -65,7 +77,7 @@ def main(argv=None) -> int:
     sides = {"base": os.path.abspath(args.base), "change": os.path.abspath(args.change)}
     with open(os.path.join(sides["change"], "BENCHMARK.json")) as f:
         bench = json.load(f)
-    metrics = bench["end_to_end"]
+    metrics = bench["end_to_end"] + HOST_CONTROLS
     runs, ok = [], True
     for i, seed in enumerate(_seeds(args.seeds)):
         order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
@@ -75,7 +87,7 @@ def main(argv=None) -> int:
             runs.append({"seed": seed, "side": side, "values": vals})
             ok &= bool(res.get("correct"))
             shown = "  ".join(
-                f"{k}={v:.2f}" if v is not None else f"{k}=-" for k, v in vals.items())
+                f"{k}={v:.4g}" if v is not None else f"{k}=-" for k, v in vals.items())
             print(f"seed {seed}  {side:<6} (first: {order[0]:<6})  correct={res.get('correct')}  "
                   f"attempted={res.get('attempted')}  failed={res.get('failed')}  {shown}",
                   flush=True)
@@ -95,10 +107,11 @@ def main(argv=None) -> int:
         stats = {s: _summary([by[s][k] for k in paired]) for s in sides}
         (bm, bq1, bq3), (cm, cq1, cq3) = stats["base"], stats["change"]
         print(f"  {name} ({m['unit']}, {m['better']} is better)")
-        print(f"    base   median {bm:.2f}  quartiles {bq1:.2f}-{bq3:.2f}")
-        print(f"    change median {cm:.2f}  quartiles {cq1:.2f}-{cq3:.2f}")
-        print(f"    change {100 * (cm - bm) / bm:+.1f}%, wins {wins}/{len(paired)}, "
-              f"|median gap| {abs(cm - bm):.2f} vs base IQR {bq3 - bq1:.2f}")
+        print(f"    base   median {bm:.4g}  quartiles {bq1:.4g}-{bq3:.4g}")
+        print(f"    change median {cm:.4g}  quartiles {cq1:.4g}-{cq3:.4g}")
+        pct = f"{100 * (cm - bm) / bm:+.1f}%" if bm else "-"
+        print(f"    change {pct}, wins {wins}/{len(paired)}, "
+              f"|median gap| {abs(cm - bm):.4g} vs base IQR {bq3 - bq1:.4g}")
     if not ok:
         print("perf_ab: at least one run was not correct", file=sys.stderr)
     return 0 if ok else 1
