@@ -7,9 +7,13 @@ that ran, ``tasks``, ``tasks_failed``, ``task_s``, ``shuffle_bytes``,
 ``shuffle_records``, ``spill_bytes``, ``peak_mem_bytes``,
 ``input_records``, ``wall_s``); ``job_ids``; ``per_stage`` as
 ``{id, name, tasks, task_s, span_s}``; ``partition_rows``, the rows each
-task of the last writing stage wrote; ``operators``, ``{nodes, rows,
-bytes}`` per kind (scan, exchange, broadcast, join, aggregate, python —
-the Python/Arrow boundary) over the SQL plans that ran the jobs;
+task of the last writing stage wrote; ``operators``, ``{nodes, rows}``
+per kind (scan, exchange, broadcast, join, aggregate, python — the
+Python/Arrow boundary) over the SQL plans that ran the jobs, plus the
+``bytes`` that scans read, exchanges wrote and the boundary moved, and
+the ``relation_bytes`` of the relations broadcasts built (a hash
+relation is sized by its key range, not by its rows, so it is never
+bytes shipped);
 ``python_ms`` of their Python workers; and ``decisions``, each
 ``plan_choice.small`` answer given in the block.  Tags leave the caller's
 job group alone, so a span nested in a job-group tracer or another span
@@ -27,12 +31,15 @@ from contextlib import contextmanager
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
-_KINDS = ("scan", "exchange", "broadcast", "join", "aggregate", "python")
-_BYTES = {
-    "scan": ("size of files read",),
-    "exchange": ("shuffle bytes written",),
-    "broadcast": ("data size",),
-    "python": ("data sent to Python workers", "data returned from Python workers"),
+_ROWS = "number of output rows"
+_FIELDS = {  # per operator kind: SQL metric name -> roll-up field
+    "scan": {_ROWS: "rows", "size of files read": "bytes"},
+    "exchange": {"shuffle records written": "rows", "shuffle bytes written": "bytes"},
+    "broadcast": {_ROWS: "rows", "data size": "relation_bytes"},
+    "join": {_ROWS: "rows"},
+    "aggregate": {_ROWS: "rows"},
+    "python": {_ROWS: "rows", "data sent to Python workers": "bytes",
+               "data returned from Python workers": "bytes"},
 }
 _PYTHON_TIME = "time to run Python workers"
 _UNITS = {"B": 1, "KiB": 2**10, "MiB": 2**20, "GiB": 2**30, "TiB": 2**40,
@@ -119,7 +126,7 @@ def _readout(spark: SparkSession, tag: str, since_ms: int, wall_s: float) -> dic
 
 def _sql_readout(spark: SparkSession, job_ids: set[int], since_ms: int) -> dict:
     store = spark._jsparkSession.sharedState().statusStore()
-    ops = {k: {"nodes": 0, "rows": 0, "bytes": 0} for k in _KINDS}
+    ops = {k: dict.fromkeys(["nodes", *f.values()], 0) for k, f in _FIELDS.items()}
     python_ms = 0.0
     for ex in _executions_since(store, since_ms):
         if not job_ids & {int(j) for j in _iter(ex.jobs().keys())}:
@@ -130,17 +137,17 @@ def _sql_readout(spark: SparkSession, job_ids: set[int], since_ms: int) -> dict:
             if kind is None:
                 continue
             ops[kind]["nodes"] += 1
-            rows = "shuffle records written" if kind == "exchange" else "number of output rows"
+            fields = _FIELDS[kind]
             for m in _iter(node.metrics()):
                 name = m.name()
-                if name != rows and name != _PYTHON_TIME and name not in _BYTES.get(kind, ()):
+                if name != _PYTHON_TIME and name not in fields:
                     continue
                 v = values.get(m.accumulatorId())
                 total = _total(v.get()) if v.isDefined() else 0
                 if name == _PYTHON_TIME:
                     python_ms += total
                 else:
-                    ops[kind]["rows" if name == rows else "bytes"] += int(total)
+                    ops[kind][fields[name]] += int(total)
     return {"operators": ops, "python_ms": python_ms}
 
 

@@ -25,7 +25,8 @@ Scale design (100 TB posture):
   metro-blocked broadcast joins below it (exact, and fastest while the
   dim ships), the windowed cell-prefix plans above it (dim-side ring
   explode + high-cardinality hash join — the only plan whose pair count
-  grows linearly when BOTH sides grow; measured in BENCH/feature_scale.py);
+  grows linearly when BOTH sides grow; the feature-join section of the
+  BENCH/BASELINE.md history);
 - every table these gates ask about has a snapshot-manifest row count, so
   deciding a feature plan never runs a count() job;
 - aggregations are single-pass partial+final hash aggs (map-side combine;

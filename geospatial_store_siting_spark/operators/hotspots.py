@@ -12,7 +12,7 @@ Python in the hot path):
   geotagged-span density. Spark plan: codegen disk-push generator + ONE
   map-side-combining hash agg + existence join on the agg's partitioning
   (see ``_gi_from_frame``; 1.6× over the explode-join form on Z-ordered
-  input, BENCH/hotspot_scale.py).
+  input, the Gi* section of the BENCH/BASELINE.md history).
 - ``hotspot_clusters``: DBSCAN-on-grid — dense cells under ring-1
   adjacency → the dedup loop's hash-min + pointer-doubling CC.
 - ``moran_i`` / ``moran_bivariate``: global spatial autocorrelation per
@@ -136,8 +136,8 @@ FROM scored"""
 def _gi_from_frame(spark: SparkSession, x: DataFrame) -> DataFrame:
     """The Gi* DataFrame plan over an analysis frame (cell_id, q, r, pop).
 
-    Spark-side plan, tuned from the scaling harness (BENCH/
-    hotspot_scale.py): instead of exploding every cell's DISK and joining
+    Spark-side plan, tuned from the Gi* scaling section of the
+    BENCH/BASELINE.md history: instead of exploding every cell's DISK and joining
     the 7×|grid| ring table against the grid (a 7× shuffle into a join
     build), each cell PUSHES its value to its 7 disk members — the ring-1
     disk is symmetric, so Σ_{j∈disk(i)} x_j == Σ_{j: i∈disk(j)} x_j — and

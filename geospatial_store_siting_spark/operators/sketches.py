@@ -671,7 +671,8 @@ def decontaminate_bloom(
     sign bit buys nothing (position space is m = words·63 either way).
     ``words`` sizes the filter (~10-16 bits per expected eval shingle
     keeps fp ~1%); the sf0.01 oracle default is BLOOM_WORDS, scale
-    harnesses pass a wider filter (BENCH/sketch_scale.py)."""
+    harnesses pass a wider filter (the Bloom decontamination section of
+    the BENCH/BASELINE.md history measured 131072 words at ×16)."""
     from .dedup import _stage_or_checkpoint
 
     sh = _stage_or_checkpoint(

@@ -51,7 +51,8 @@ def get_spark(
         # measured in the r6 ingest profile; re-measure with
         # tools/layer_profile.py), while a flat 32 MB gave local[4] 4x
         # the tasks with no idle cores to feed and measurably slowed it
-        # (BENCH/scaling.py r5: 79 s -> 97 s at N=4).
+        # (distance kernels at N=4, r5: 79 s -> 97 s; BENCH/BASELINE.md
+        # history; BENCH/scale.py re-measures every leaf at N and 4N).
         # 512 MB/cores targets ~cores splits per ~0.5 GB scan at every
         # level, floored at 32 MB; a real cluster submit overrides this
         # for 100-TB inputs with large files.

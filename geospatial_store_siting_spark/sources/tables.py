@@ -67,18 +67,15 @@ def all_views() -> dict:
     return {**GEO_VIEWS, **_dev_views()}
 
 
-def register_geo_views(
-    spark: SparkSession, sf_dir: str | None = None, materialize: bool = True
-) -> dict[str, DataFrame]:
+def register_geo_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Create sites/competitors/poi/hex_grid temp views (requires base views).
 
-    By default the derived tables are materialized once via the snapshot
-    layer (sources/snapshots.py) and the views read the committed parquet:
-    they are dim-table-scale yet feed 6+ feature families, and inlining the
+    The derived tables are materialized once via the snapshot layer
+    (sources/snapshots.py) and the views read the committed parquet: they
+    are dim-table-scale yet feed 6+ feature families, and inlining the
     synthesis expression tree into every consumer plan costs seconds of
     Catalyst planning + janino codegen per query (and at 100 TB would
-    re-scan the base tables per consumer).  ``materialize=False`` falls
-    back to cached logical views (used when sf_dir is unknown).
+    re-scan the base tables per consumer).
     """
     from . import snapshots
 
@@ -91,13 +88,10 @@ def register_geo_views(
     out = {}
     rows: dict[str, int] = {}
     for name, sql_fn in all_views().items():
-        if materialize and sf_dir:
-            df = snapshots.snapshot_table(spark, name, sql_fn(), sf_dir)
-            meta = snapshots.read_manifest(sf_dir, name, sql_fn())
-            if meta and "rows" in meta:
-                rows[name] = int(meta["rows"])
-        else:
-            df = spark.sql(sql_fn()).cache()
+        df = snapshots.snapshot_table(spark, name, sql_fn(), sf_dir)
+        meta = snapshots.read_manifest(sf_dir, name, sql_fn())
+        if meta and "rows" in meta:
+            rows[name] = int(meta["rows"])
         df.createOrReplaceTempView(name)
         out[name] = df
     # manifest stats feed the size gates (operators/plan_choice.py):
@@ -108,11 +102,11 @@ def register_geo_views(
     return out
 
 
-def load_all(spark: SparkSession, sf_dir: str, materialize: bool = True) -> dict[str, DataFrame]:
+def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # stage views are dropped inside register_geo_views (unconditional:
     # base inputs are being re-registered)
     tables = register_tables(spark, sf_dir)
-    tables.update(register_geo_views(spark, sf_dir, materialize=materialize))
+    tables.update(register_geo_views(spark, sf_dir))
     return tables
 
 

@@ -35,33 +35,37 @@ EVENTS_SCHEMA = (
 )
 
 
-def _stream_dir(table: str, sf_dir: str) -> str:
-    """Staging directory of a bounded file stream, committed through
-    snapshots.commit (built once, reused by every later stream)."""
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(snapshots.DEFAULT_ROOT, f"stream_{table}_{sf_tag}")
+def _file_stream(
+    spark: SparkSession, sf_dir: str, table: str, layout, schema: str | None = None
+) -> DataFrame:
+    """``table`` as a bounded file stream of one file per trigger.
 
-
-def events_stream(spark: SparkSession, sf_dir: str, max_files: int = 1) -> DataFrame:
-    """The events table as a bounded file stream.
-
-    FileStreamSource requires a directory, so the single events.parquet is
-    staged once into a 4-file directory — with maxFilesPerTrigger=1 the
-    query processes 4 real micro-batches (incremental state, not one
-    degenerate batch).  Files are RANGE-partitioned by ts so batches
-    arrive in event-time order — otherwise the watermark races ahead on
-    the first batch and drops everything else as late (exactly what a
-    production replay from time-ordered partitions provides)."""
-    stage_dir = _stream_dir("events", sf_dir)
-    snapshots.commit(
-        spark,
-        lambda: spark.read.parquet(f"{sf_dir}/events.parquet").repartitionByRange(4, "ts"),
-        stage_dir,
+    FileStreamSource requires a directory, so the single
+    ``<table>.parquet`` is staged once through snapshots.commit (built
+    once, reused by every later stream) into the files ``layout`` cuts
+    it into; the stream then processes one real micro-batch per file."""
+    stage_dir = os.path.join(
+        snapshots.DEFAULT_ROOT, f"stream_{table}_{os.path.basename(sf_dir.rstrip('/'))}"
+    )
+    staged = snapshots.commit(
+        spark, lambda: layout(spark.read.parquet(f"{sf_dir}/{table}.parquet")), stage_dir
     )
     return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
+        spark.readStream.schema(schema or staged.schema)
+        .option("maxFilesPerTrigger", 1)
         .parquet(stage_dir)
+    )
+
+
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a bounded 4-file stream (4 micro-batches:
+    incremental state, not one degenerate batch).  Files are
+    RANGE-partitioned by ts so batches arrive in event-time order —
+    otherwise the watermark races ahead on the first batch and drops
+    everything else as late (exactly what a production replay from
+    time-ordered partitions provides)."""
+    return _file_stream(
+        spark, sf_dir, "events", lambda df: df.repartitionByRange(4, "ts"), EVENTS_SCHEMA
     )
 
 
@@ -249,19 +253,10 @@ def run_to_memory(stream_df: DataFrame, name: str):
 # Streaming twin of the geotagged-span → tile-rollup pipeline stage
 # ---------------------------------------------------------------------------
 
-def documents_stream(spark: SparkSession, sf_dir: str, max_files: int = 1) -> DataFrame:
-    """The documents table as a bounded 4-file stream (same staging trick
-    as events_stream; order doesn't matter here — the rollup is not
-    event-time windowed)."""
-    stage_dir = _stream_dir("documents", sf_dir)
-    staged = snapshots.commit(
-        spark, lambda: spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(4), stage_dir
-    )
-    return (
-        spark.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(stage_dir)
-    )
+def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table as a bounded 4-file stream (order doesn't
+    matter here — the rollup is not event-time windowed)."""
+    return _file_stream(spark, sf_dir, "documents", lambda df: df.repartition(4))
 
 
 def _geo_span_stream(docs: DataFrame) -> DataFrame:
@@ -391,8 +386,38 @@ def corpus_ingest_stream(docs: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming twin of the incremental ingest dedup (foreachBatch service)
+# foreachBatch twins: the incremental ingest dedup service and catchments
 # ---------------------------------------------------------------------------
+
+_VERDICTS = "doc_id bigint, status string, match_doc bigint"
+
+
+def _drain(spark: SparkSession, stream: DataFrame, per_batch, schema: str) -> DataFrame:
+    """Run ``stream`` synchronously to completion (availableNow) through
+    foreachBatch and return the union of the micro-batch outputs as one
+    DataFrame of ``schema``.  ``per_batch(session, batch_df)`` returns a
+    micro-batch's output as pandas; ``session`` is the stream's CLONED
+    session that the micro-batch frame belongs to, so plans built against
+    it (parameterized spark.sql, table lookups) must use it, not the
+    outer one.  Test-scale sink: outputs are collected on the driver;
+    production would ``.writeTo(lake_table).append()`` per trigger."""
+    collected: list[pd.DataFrame] = []
+
+    def each(batch_df: DataFrame, batch_id: int) -> None:
+        collected.append(per_batch(batch_df.sparkSession, batch_df))
+
+    stream.writeStream.foreachBatch(each).trigger(availableNow=True).start().awaitTermination()
+    allv = pd.concat(collected, ignore_index=True)
+    cols = [c.split() for c in schema.split(", ")]
+    rows = [
+        tuple(
+            None if pd.isna(v) else (int(v) if kind == "bigint" else str(v))
+            for v, (_, kind) in zip(r, cols)
+        )
+        for r in allv[[name for name, _ in cols]].itertuples(index=False)
+    ]
+    return spark.createDataFrame(rows, schema)
+
 
 def incremental_dedup_stream(
     spark: SparkSession,
@@ -414,49 +439,15 @@ def incremental_dedup_stream(
     over a FIXED corpus side — batch semantics per trigger, no streaming
     state.  The batch-equivalence test asserts the union of micro-batch
     outputs is row-identical to dedup_incremental's one-shot result.
-    Production would append `novel` rows (and their signatures) to the
-    corpus + signature stage per trigger, making the service
-    self-extending; kept out of the twin so it stays equal to the
-    value-checked batch operator.
-
-    Runs synchronously to completion (availableNow) and returns the
-    accumulated classifications as one DataFrame."""
-    import pandas as pd
-
+    Production appends `novel` rows to the corpus per trigger
+    (self_extending_ingest_stream); kept out of this twin so it stays
+    equal to the value-checked batch operator."""
     from ..operators import dedup
 
-    collected: list[pd.DataFrame] = []
+    def classify(s: SparkSession, batch: DataFrame) -> pd.DataFrame:
+        return dedup.classify_arrivals(s, batch.select("doc_id", "text"), threshold, sf_dir).toPandas()
 
-    def classify(batch_df: DataFrame, batch_id: int) -> None:
-        # the micro-batch frame belongs to the stream's CLONED session —
-        # plans built against it (parameterized spark.sql, table lookups)
-        # must use that session, not the outer one
-        s = batch_df.sparkSession
-        out = dedup.classify_arrivals(
-            s, batch_df.select("doc_id", "text"), threshold, sf_dir
-        )
-        # test-scale sink: collect per-trigger verdicts on the driver;
-        # production: .writeTo(lake_table).append() per trigger
-        collected.append(out.toPandas())
-
-    q = (
-        docs.writeStream.foreachBatch(classify)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    allv = pd.concat(collected, ignore_index=True)
-    rows = [
-        (
-            int(r.doc_id),
-            str(r.status),
-            None if pd.isna(r.match_doc) else int(r.match_doc),
-        )
-        for r in allv.itertuples()
-    ]
-    return spark.createDataFrame(
-        rows, "doc_id bigint, status string, match_doc bigint"
-    )
+    return _drain(spark, docs, classify, _VERDICTS)
 
 
 def self_extending_ingest_stream(
@@ -480,41 +471,19 @@ def self_extending_ingest_stream(
     checkpoint), not from in-memory state.  Verdicts are pinned per
     trigger BEFORE the commit, so each doc's classification reflects the
     corpus as of its own arrival."""
-    import pandas as pd
-
     from ..operators import dedup
 
-    collected: list[pd.DataFrame] = []
-
-    def classify_and_commit(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        arrivals = batch_df.select("doc_id", "text")
+    def classify_and_commit(s: SparkSession, batch: DataFrame) -> pd.DataFrame:
+        arrivals = batch.select("doc_id", "text")
         out = dedup.classify_arrivals(s, arrivals, threshold, sf_dir)
         # pin verdicts first: commit_arrivals re-executes the classify
         # plan (against the still-unextended index) when it pins the
         # novel set, then appends — order keeps the two views identical
-        collected.append(out.toPandas())
-        dedup.commit_arrivals(s, arrivals, sf_dir, classified=out,
-                              threshold=threshold)
+        pinned = out.toPandas()
+        dedup.commit_arrivals(s, arrivals, sf_dir, classified=out, threshold=threshold)
+        return pinned
 
-    q = (
-        docs.writeStream.foreachBatch(classify_and_commit)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    allv = pd.concat(collected, ignore_index=True)
-    rows = [
-        (
-            int(r.doc_id),
-            str(r.status),
-            None if pd.isna(r.match_doc) else int(r.match_doc),
-        )
-        for r in allv.itertuples()
-    ]
-    return spark.createDataFrame(
-        rows, "doc_id bigint, status string, match_doc bigint"
-    )
+    return _drain(spark, docs, classify_and_commit, _VERDICTS)
 
 
 def catchment_stream(spark: SparkSession, sites: DataFrame) -> DataFrame:
@@ -528,37 +497,13 @@ def catchment_stream(spark: SparkSession, sites: DataFrame) -> DataFrame:
     micro-batch outputs equals the one-shot batch result row-for-row
     (asserted by the batch-equivalence test).  No streaming state at
     all: the production shape is "new candidates → their trade areas
-    appended to the lake per trigger".
-
-    Runs synchronously (availableNow) and returns the accumulated reach
-    rows as one DataFrame."""
-    import pandas as pd
-
+    appended to the lake per trigger"."""
     from ..operators import isochrone
 
-    collected: list[pd.DataFrame] = []
+    def expand(s: SparkSession, batch: DataFrame) -> pd.DataFrame:
+        return isochrone.catchment_reach(s, sites_df=batch).toPandas()
 
-    def expand(batch_df: DataFrame, batch_id: int) -> None:
-        # micro-batch frames live in the stream's cloned session; build
-        # the expansion (and its hex_grid lookup) there
-        s = batch_df.sparkSession
-        out = isochrone.catchment_reach(s, sites_df=batch_df)
-        collected.append(out.toPandas())
-
-    q = (
-        sites.writeStream.foreachBatch(expand)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    allv = pd.concat(collected, ignore_index=True)
-    rows = [
-        (int(r.site_id), int(r.cell_id), int(r.cost_min))
-        for r in allv.itertuples()
-    ]
-    return spark.createDataFrame(
-        rows, "site_id bigint, cell_id bigint, cost_min bigint"
-    )
+    return _drain(spark, sites, expand, "site_id bigint, cell_id bigint, cost_min bigint")
 
 
 def st_bins_stream(events: DataFrame, sites: DataFrame) -> DataFrame:

@@ -52,3 +52,16 @@ def test_size_gate_decision_recorded(geo):
     }
     assert sp["decisions"] == outer["decisions"] == [decision]
     assert sp["job_ids"] == []  # manifest-backed counts: the gate runs no job
+
+
+def test_broadcast_rows_and_relation_size(spark):
+    from pyspark.sql import functions as F
+
+    small = spark.range(10).withColumn("k", F.col("id") * 1000)
+    with observe.span(spark, "broadcast") as sp:
+        spark.range(1000).join(F.broadcast(small), "id").write.format("noop").mode("overwrite").save()
+    bc = sp["operators"]["broadcast"]
+    assert bc["nodes"] == 1 and bc["rows"] == 10
+    # the built relation's size is its own field, never read as bytes shipped
+    assert bc["relation_bytes"] > 0 and "bytes" not in bc
+    assert sp["operators"]["join"]["rows"] == 10

@@ -392,8 +392,9 @@ def test_asof_tie_determinism(geo):
 def test_rank_filtered_windows_plan_group_limits(geo):
     """Every rank<=k window cut in the engine must plan with Catalyst's
     WindowGroupLimit (map-side per-group limits) — the property that makes
-    the plain window form skew-resistant (BENCH/skew_ring.py measured a
-    ~24x gap on a hot cell when the limit is not inferable).  If a future
+    the plain window form skew-resistant (the skewed-grid section of the
+    BENCH/BASELINE.md history measured a ~24x gap on a hot cell when the
+    limit is not inferable).  If a future
     edit moves the rank filter away from the window, this catches the
     silently-reintroduced straggler."""
     from geospatial_store_siting_spark.operators import dev_signals, knn, scoring, skew
